@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Observation => RowCount}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -48,11 +49,16 @@ object StreamPipeline {
     Clean.coerceToSchema(parsed, Observation.schema)
   }
 
-  /** W1 — per-key strictly-monotonic dedup on the typed stream. */
+  /** W1 — per-key strictly-monotonic dedup on the typed stream. Rows
+    * missing a required field (a null or unparsable `timestamp`, a null
+    * `station_id`) are dropped first: they have no event time to order by,
+    * and `Clean.prepareHourly` would drop them downstream anyway (F1).
+    */
   def dedupMonotonic(obs: DataFrame)(implicit spark: SparkSession): Dataset[Observation] = {
     import spark.implicits._
     MonotonicDedup.dedupe[String, Observation](
-      obs.as[Observation], _.station_id, _.timestamp.getTime)
+      Clean.dropNullKeys(obs, Observation.requiredFields).as[Observation],
+      _.station_id, _.timestamp.getTime)
   }
 
   /** S7/S8 + W4 — the full consumer: parse → monotonic dedup → hourly prep
@@ -68,6 +74,15 @@ object StreamPipeline {
     * exactly this hole (crash between upload and watermark-save ⇒
     * duplicate rows, `kafka_stream.py:326-330`); partition-dir idempotence
     * closes it.
+    *
+    * Each micro-batch is computed ONCE, in one Spark job: the prepared
+    * frame carries a Spark `Observation` row count and is written as is.
+    * A batch whose rows were all dropped (replays, older readings,
+    * malformed records) is detected by that count and its just-written
+    * `batch_id=<n>` directory is removed after the write, so an empty batch
+    * leaves no directory without a separate emptiness probe that would
+    * re-run the parse, the state-store pass and the keep-last shuffle. A
+    * retried empty batch overwrites and removes its directory again.
     */
   def writeHourly(wire: DataFrame, warehouseDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"))(
@@ -79,9 +94,14 @@ object StreamPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Observation], batchId: Long) =>
         val (clean, _) = Clean.prepareHourly(batch.toDF(), Observation.schema)
-        if (!clean.isEmpty)
-          clean.write.mode("overwrite")
-            .parquet(s"$warehouseDir/batch_id=$batchId")
+        val out = new Path(s"$warehouseDir/batch_id=$batchId")
+        val rows = RowCount()
+        clean.observe(rows, count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(out.toString)
+        if (rows.get("n") == 0L)
+          out.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(out, true)
+        ()
       }
       .start()
   }

@@ -1,11 +1,16 @@
 package graft.streaming
 
+import java.io.File
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpec
 import graft.schema.Observation
@@ -364,32 +369,44 @@ class StreamingSpec extends SparkSpec {
     assert(rows.contains("u2") && rows("u2").isEmpty) // unmatched: null right
   }
 
-  test("streaming pipeline: wire JSON → parse → monotonic dedup across " +
-      "micro-batches → hourly parquet append") {
+  private def wireJson(o: Observation): String =
+    s"""{"station_id":"${o.station_id}","station_name":"${o.station_name.get}",
+       |"latitude":60.0,"longitude":24.0,"elevation":10.0,
+       |"timestamp":"${o.timestamp.toInstant}","temperature":${o.temperature.get},
+       |"humidity":50.0,"wind_speed":3.0}""".stripMargin.replace("\n", "")
+
+  /** A `writeHourly` consumer over a MemoryStream of wire JSON, with its
+    * own warehouse and checkpoint; each `feed` adds one micro-batch and
+    * runs the query (restarted from the checkpoint) until it is drained. */
+  private class HourlyConsumer {
     import spark.implicits._
-    implicit val s = spark
-    implicit val sqlCtx = spark.sqlContext
-    val warehouse = Files.createTempDirectory("graft-wh").toString
-    val checkpoint = Files.createTempDirectory("graft-ck").toString
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val warehouse: String = Files.createTempDirectory("graft-wh").toString
+    private val checkpoint = Files.createTempDirectory("graft-ck").toString
+    private val mem = MemoryStream[String]
 
-    val mem = MemoryStream[String]
-    val wire = mem.toDF().select(col("value"))
-
-    def feed(batch: Seq[Observation]): Unit = {
-      val json = batch.map { o =>
-        s"""{"station_id":"${o.station_id}","station_name":"${o.station_name.get}",
-           |"latitude":60.0,"longitude":24.0,"elevation":10.0,
-           |"timestamp":"${o.timestamp.toInstant}","temperature":${o.temperature.get},
-           |"humidity":50.0,"wind_speed":3.0}""".stripMargin.replace("\n", "")
-      }
-      mem.addData(json)
-      val q = StreamPipeline.writeHourly(wire, warehouse, checkpoint,
-        Trigger.AvailableNow())
+    def feedJson(lines: Seq[String]): StreamingQuery = {
+      mem.addData(lines)
+      val q = StreamPipeline.writeHourly(mem.toDF().select(col("value")),
+        warehouse, checkpoint, Trigger.AvailableNow())(spark)
       q.awaitTermination()
+      q
     }
 
+    def feed(batch: Seq[Observation]): StreamingQuery = feedJson(batch.map(wireJson))
+
+    def batchDirs: Set[String] =
+      new File(warehouse).listFiles().map(_.getName)
+        .filter(_.startsWith("batch_id=")).toSet
+  }
+
+  test("streaming pipeline: wire JSON → parse → monotonic dedup across " +
+      "micro-batches → hourly parquet append") {
+    val c = new HourlyConsumer
+    val warehouse = c.warehouse
+
     // batch 1: two readings in the same hour → keep-last lands in warehouse
-    feed(Seq(obs("S1", "2024-06-01 10:00:00", 1.0),
+    c.feed(Seq(obs("S1", "2024-06-01 10:00:00", 1.0),
       obs("S1", "2024-06-01 10:10:00", 2.0)))
     val after1 = spark.read.parquet(warehouse)
     assert(after1.count() == 1)
@@ -397,13 +414,80 @@ class StreamingSpec extends SparkSpec {
 
     // batch 2: a replay (same ts) and an older record → both rejected by the
     // per-key watermark state carried in the checkpoint; a newer one passes
-    feed(Seq(obs("S1", "2024-06-01 10:10:00", 9.0),
+    c.feed(Seq(obs("S1", "2024-06-01 10:10:00", 9.0),
       obs("S1", "2024-06-01 09:00:00", 9.0),
       obs("S1", "2024-06-01 11:00:00", 3.0)))
     val after2 = spark.read.parquet(warehouse)
     assert(after2.count() == 2)
     assert(after2.agg(sum("temperature")).collect()(0).getDouble(0) == 5.0)
     assert(StreamPipeline.verifyRowPersistence(spark, warehouse, 2))
+  }
+
+  test("writeHourly survives records with a null or unparsable timestamp " +
+      "or a null station id; the warehouse holds exactly the valid rows") {
+    val c = new HourlyConsumer
+    val q = c.feedJson(Seq(
+      wireJson(obs("S1", "2024-06-01 10:00:00", 1.0)),
+      """{"station_id":"S1","station_name":"x","timestamp":null,"temperature":7.0}""",
+      """{"station_id":"S2","station_name":"x","timestamp":"not a time","temperature":7.0}""",
+      """{"station_id":"S3","station_name":"x","temperature":7.0}""",
+      """{"station_id":null,"station_name":"x","timestamp":"2024-06-01T10:20:00Z","temperature":7.0}""",
+      """{"station_name":"x","timestamp":"2024-06-01T10:30:00Z","temperature":7.0}""",
+      wireJson(obs("S2", "2024-06-01 10:00:00", 2.0))))
+    assert(q.exception.isEmpty)
+    val rows = spark.read.parquet(c.warehouse).collect()
+      .map(r => (r.getAs[String]("station_id"), r.getAs[Timestamp]("timestamp"),
+        r.getAs[Double]("temperature"))).toSet
+    assert(rows == Set(("S1", ts("2024-06-01 10:00:00"), 1.0),
+      ("S2", ts("2024-06-01 10:00:00"), 2.0)))
+  }
+
+  test("writeHourly: a micro-batch whose rows are all dropped leaves no " +
+      "batch directory; the next non-empty batch still lands") {
+    val c = new HourlyConsumer
+    c.feed(Seq(obs("S1", "2024-06-01 10:00:00", 1.0),
+      obs("S2", "2024-06-01 10:00:00", 2.0)))
+    // only a replay and older readings: the monotonic dedup drops them all
+    c.feed(Seq(obs("S1", "2024-06-01 10:00:00", 9.0),
+      obs("S1", "2024-06-01 09:00:00", 9.0),
+      obs("S2", "2024-06-01 08:00:00", 9.0)))
+    c.feed(Seq(obs("S1", "2024-06-01 11:00:00", 3.0)))
+    assert(c.batchDirs == Set("batch_id=0", "batch_id=2"))
+    assert(spark.read.parquet(s"${c.warehouse}/batch_id=2").count() == 1)
+    assert(StreamPipeline.verifyRowPersistence(spark, c.warehouse, 3))
+  }
+
+  test("writeHourly computes each non-empty micro-batch in exactly one " +
+      "Spark job") {
+    val c = new HourlyConsumer
+    c.feed(Seq(obs("S1", "2024-06-01 10:00:00", 1.0)))
+    // job starts by job group (a streaming run's group is its run id);
+    // the test thread's sentinel job is delivered after every earlier job
+    val groups = new ConcurrentLinkedQueue[String]()
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("graft.test.sentinel") != null))
+          sentinelSeen.countDown()
+        else props.flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val q = c.feed(Seq(obs("S1", "2024-06-01 11:00:00", 2.0),
+        obs("S2", "2024-06-01 11:00:00", 3.0),
+        obs("S2", "2024-06-01 11:30:00", 4.0)))
+      assert(q.lastProgress.batchId == 1L && q.lastProgress.numInputRows == 3L)
+      sc.setLocalProperty("graft.test.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.sentinel", null)
+      assert(sentinelSeen.await(60, TimeUnit.SECONDS))
+      assert(groups.asScala.count(_ == q.runId.toString) == 1)
+    } finally sc.removeSparkListener(listener)
+    assert(c.batchDirs == Set("batch_id=0", "batch_id=1"))
   }
 
   test("StreamNearDup: stateless append-mode near-dup flags against a " +
