@@ -27,9 +27,20 @@ object MonotonicDedup {
 
   /** Within a batch, records for a key are processed in ascending event
     * time; across batches the state carries the high-water mark. Returns
-    * records that advanced their key's watermark.
+    * the records that advanced their key's watermark (the survivors),
+    * reduced to the LAST survivor of each `bucket` of event time.
+    *
+    * `bucket` maps an event time to the bucket it belongs to and must be
+    * non-decreasing in time (e.g. a floor to the hour). Survivors are
+    * sorted and strictly increasing, so a survivor is kept exactly when
+    * the next survivor of its key falls in another bucket: keep-last per
+    * (key, bucket) within the batch, folded into the state pass instead of
+    * a second shuffle. The default `identity` puts every survivor in its
+    * own bucket, so all survivors are returned. The high-water mark is the
+    * last survivor either way, and that survivor is always returned.
     */
-  def dedupe[K, V](ds: Dataset[V], key: V => K, eventTimeMillis: V => Long)(
+  def dedupe[K, V](ds: Dataset[V], key: V => K, eventTimeMillis: V => Long,
+      bucket: Long => Long = identity)(
       implicit ke: Encoder[K], ve: Encoder[V],
       tupleEnc: Encoder[(K, V)]): Dataset[V] = {
     implicit val longEnc: Encoder[Long] = Encoders.scalaLong
@@ -37,12 +48,15 @@ object MonotonicDedup {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: K, rows: Iterator[V], state: GroupState[Long]) =>
           var hwm = state.getOption.getOrElse(Long.MinValue)
-          val out = rows.toSeq.sortBy(eventTimeMillis).iterator.flatMap { v =>
+          val survivors = rows.toVector.sortBy(eventTimeMillis).filter { v =>
             val t = eventTimeMillis(v)
-            if (t > hwm) { hwm = t; Some(v) } else None
-          }.toSeq
-          if (out.nonEmpty) state.update(hwm)
-          out.iterator
+            if (t > hwm) { hwm = t; true } else false
+          }
+          if (survivors.nonEmpty) state.update(hwm)
+          val buckets = survivors.map(v => bucket(eventTimeMillis(v)))
+          survivors.indices.iterator
+            .filter(i => i + 1 == survivors.size || buckets(i + 1) != buckets(i))
+            .map(survivors)
       }
   }
 }

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.time.{Instant, ZoneId}
+import java.time.temporal.ChronoUnit
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Observation => RowCount}
 import org.apache.spark.sql.functions._
@@ -49,23 +52,44 @@ object StreamPipeline {
     Clean.coerceToSchema(parsed, Observation.schema)
   }
 
-  /** W1 — per-key strictly-monotonic dedup on the typed stream. Rows
-    * missing a required field (a null or unparsable `timestamp`, a null
-    * `station_id`) are dropped first: they have no event time to order by,
-    * and `Clean.prepareHourly` would drop them downstream anyway (F1).
+  /** The hour an epoch-millisecond instant falls in, as the epoch millis of
+    * its start in `zone`: the same `java.time` truncation that
+    * `date_trunc("hour", ...)` applies under a session time zone of `zone`
+    * (zones with a half-hour offset start their hours at :30 UTC).
+    */
+  def hourBucket(zone: ZoneId): Long => Long =
+    t => Instant.ofEpochMilli(t).atZone(zone).truncatedTo(ChronoUnit.HOURS)
+      .toInstant.toEpochMilli
+
+  /** W1 + D2 — per-key strictly-monotonic dedup on the typed stream, keeping
+    * the latest surviving reading of each station and hour (the keep-last of
+    * `Clean.prepareHourly`). Hours are those of the session time zone at the
+    * time the query is built, so they agree with the `date_trunc("hour", ...)`
+    * that floors the written timestamp. Rows missing a required field (a null
+    * or unparsable `timestamp`, a null `station_id`) are dropped first: they
+    * have no event time to order by, and `Clean.prepareHourly` drops them
+    * too (F1).
     */
   def dedupMonotonic(obs: DataFrame)(implicit spark: SparkSession): Dataset[Observation] = {
     import spark.implicits._
+    val zone = ZoneId.of(obs.sparkSession.conf.get("spark.sql.session.timeZone"))
     MonotonicDedup.dedupe[String, Observation](
       Clean.dropNullKeys(obs, Observation.requiredFields).as[Observation],
-      _.station_id, _.timestamp.getTime)
+      _.station_id, _.timestamp.getTime, hourBucket(zone))
   }
 
-  /** S7/S8 + W4 — the full consumer: parse → monotonic dedup → hourly prep
-    * → parquet warehouse, checkpointed. `foreachBatch` runs the batch-only
-    * window dedup (D2) per micro-batch, mirroring the reference's
+  /** S7/S8 + W4 — the full consumer: parse → monotonic dedup with hourly
+    * keep-last → hour floor → parquet warehouse, checkpointed; the
+    * Structured Streaming form of the reference's
     * buffer-then-`prepare_hourly_for_bigquery` flush (`kafka_stream.py:
-    * 310-333`).
+    * 310-333`). The keep-last per (station, hour) happens inside the
+    * [[dedupMonotonic]] state pass, which already holds each station's rows
+    * in one task sorted by event time, so `foreachBatch` only floors
+    * `timestamp` to the hour (a narrow projection) and the micro-batch
+    * shuffles once, on the station key. Rows reaching it are already
+    * non-null on `Observation.schema`'s required fields, so the batch form's
+    * validity split has nothing to reject. `Clean.prepareHourly` remains
+    * the batch definition the fold is tested against.
     *
     * W3 exactly-once: each micro-batch OVERWRITES its own
     * `batch_id=<n>` partition directory instead of blind-appending — a
@@ -81,8 +105,8 @@ object StreamPipeline {
     * malformed records) is detected by that count and its just-written
     * `batch_id=<n>` directory is removed after the write, so an empty batch
     * leaves no directory without a separate emptiness probe that would
-    * re-run the parse, the state-store pass and the keep-last shuffle. A
-    * retried empty batch overwrites and removes its directory again.
+    * re-run the parse and the state-store pass. A retried empty batch
+    * overwrites and removes its directory again.
     */
   def writeHourly(wire: DataFrame, warehouseDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"))(
@@ -93,7 +117,7 @@ object StreamPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Observation], batchId: Long) =>
-        val (clean, _) = Clean.prepareHourly(batch.toDF(), Observation.schema)
+        val clean = batch.toDF().withColumn("timestamp", date_trunc("hour", col("timestamp")))
         val out = new Path(s"$warehouseDir/batch_id=$batchId")
         val rows = RowCount()
         clean.observe(rows, count(lit(1)).as("n"))

@@ -8,7 +8,7 @@ import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
 import graft.schema.Observation
-import graft.streaming.MonotonicDedup
+import graft.streaming.{MonotonicDedup, StreamPipeline}
 
 /** Property tests for the invariants SURVEY.md §5 calls out: dedup
   * idempotence and determinism, hour-floor bucketing, and strict
@@ -91,6 +91,43 @@ class PropertySpec extends SparkSpec {
           assert(times.length == expected, s"count for $k")
         }
       }
+    }
+  }
+
+  test("property: MonotonicDedup with the hour bucket, timestamp floored, " +
+      "equals prepareHourly over the unbucketed dedup, row for row") {
+    import spark.implicits._
+    // several readings per station-hour over four hours, arriving out of
+    // event-time order, plus exact replays of some of them (a replay is
+    // the same reading again, so which copy survives cannot matter)
+    val gen = for {
+      rows <- Gen.listOfN(60, for {
+        key <- Gen.oneOf("S1", "S2", "S3")
+        minute <- Gen.choose(0, 239)
+      } yield (key, minute))
+      replays <- Gen.someOf(rows)
+      order <- Gen.long
+    } yield new scala.util.Random(order).shuffle(rows ++ replays)
+      .map { case (k, m) => (k, m, m * 0.25 + k.last.asDigit) }
+    val hour = StreamPipeline.hourBucket(java.time.ZoneId.of(
+      spark.conf.get("spark.sql.session.timeZone")))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    forAll(gen) { rows =>
+      val ds = toDf(rows).as[(String, Timestamp, Double)]
+        .map { case (k, t, v) => Observation(k, None, None, None, None, t,
+          Some(v), None, None) }
+      val folded = MonotonicDedup.dedupe[String, Observation](
+          ds, _.station_id, _.timestamp.getTime, hour).toDF()
+        .withColumn("timestamp", date_trunc("hour", col("timestamp")))
+      val (batch, rejected) = Clean.prepareHourly(MonotonicDedup
+        .dedupe[String, Observation](ds, _.station_id, _.timestamp.getTime)
+        .toDF(), Observation.schema)
+      assert(rejected.isEmpty)
+      val expected = sorted(batch)
+      assert(expected.size < rows.map(r => (r._1, r._2)).distinct.size,
+        "some station-hour must hold several readings")
+      assert(sorted(folded) == expected)
     }
   }
 

@@ -461,9 +461,10 @@ class StreamingSpec extends SparkSpec {
       "Spark job") {
     val c = new HourlyConsumer
     c.feed(Seq(obs("S1", "2024-06-01 10:00:00", 1.0)))
-    // job starts by job group (a streaming run's group is its run id);
-    // the test thread's sentinel job is delivered after every earlier job
-    val groups = new ConcurrentLinkedQueue[String]()
+    // job starts by job group (a streaming run's group is its run id),
+    // with the job's stage count; the test thread's sentinel job is
+    // delivered after every earlier job
+    val jobs = new ConcurrentLinkedQueue[(String, Int)]()
     val sentinelSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -471,7 +472,7 @@ class StreamingSpec extends SparkSpec {
         if (props.exists(_.getProperty("graft.test.sentinel") != null))
           sentinelSeen.countDown()
         else props.flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
+          .foreach(g => jobs.add((g, e.stageInfos.size)))
       }
     }
     val sc = spark.sparkContext
@@ -485,9 +486,29 @@ class StreamingSpec extends SparkSpec {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty("graft.test.sentinel", null)
       assert(sentinelSeen.await(60, TimeUnit.SECONDS))
-      assert(groups.asScala.count(_ == q.runId.toString) == 1)
+      // one job of two stages: parse + shuffle write on the station key,
+      // then the state pass with the hourly keep-last and the parquet write
+      val stages = jobs.asScala.collect { case (g, n) if g == q.runId.toString => n }
+      assert(stages.toSeq == Seq(2))
     } finally sc.removeSparkListener(listener)
     assert(c.batchDirs == Set("batch_id=0", "batch_id=1"))
+  }
+
+  test("writeHourly keeps the last reading per station and hour of the " +
+      "session time zone, not per UTC hour") {
+    import java.time.Instant
+    def at(instant: String, temp: Double) = obs("S1", "2024-06-01 00:00:00", temp)
+      .copy(timestamp = Timestamp.from(Instant.parse(instant)))
+    val c = new HourlyConsumer
+    val conf = spark.conf
+    conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    // same UTC hour, but 15:40 and 16:10 in Kolkata (UTC+05:30)
+    try c.feed(Seq(at("2024-06-01T10:10:00Z", 1.0), at("2024-06-01T10:40:00Z", 2.0)))
+    finally conf.set("spark.sql.session.timeZone", "UTC")
+    val rows = spark.read.parquet(c.warehouse).collect()
+      .map(r => (r.getAs[Timestamp]("timestamp").toInstant, r.getAs[Double]("temperature"))).toSet
+    assert(rows == Set((Instant.parse("2024-06-01T09:30:00Z"), 1.0),
+      (Instant.parse("2024-06-01T10:30:00Z"), 2.0)))
   }
 
   test("StreamNearDup: stateless append-mode near-dup flags against a " +
@@ -509,13 +530,15 @@ class StreamingSpec extends SparkSpec {
     val flags = StreamNearDup.flagNearDups(
       mem.toDF().toDF("doc_id", "text"), arr, bands,
       "doc_id", "text", 3, 32, 8, 0.8)
-    val q = flags.writeStream.format("memory").queryName("neardup_flags")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    // data goes in before start: an AvailableNow query fixes its end
+    // offset when it starts, so rows added later may never be read
     mem.addData(
       // one-word edit of corpus doc 100 → jaccard 0.854, must flag
       (1L, base.updated(19, "edited").mkString(" ")),
       // fresh text → no flag row at all
       (2L, "entirely novel content that matches nothing in the corpus"))
+    val q = flags.writeStream.format("memory").queryName("neardup_flags")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val rows = spark.table("neardup_flags")
       .select("sid", "corpus_id").distinct()   // band collisions may repeat rows
