@@ -10,7 +10,7 @@ import org.apache.spark.sql.Dataset
   * (shingle postings, signatures) that are referenced more than once in the
   * plan they return. The operator cannot unpersist them itself — the caller
   * has not run an action yet — so it registers them here and the harness
-  * (Verify / Bench / any long-lived session) drops them once the query's
+  * (Verify / perfbench / any long-lived session) drops them once the query's
   * terminal action finishes. Without this a multi-query session accumulates
   * dead cache blocks that evict each other ("Block already exists" /
   * "Asked to cache already cached data" churn in a 46-query run).

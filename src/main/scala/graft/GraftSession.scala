@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Session + table-loading helpers shared by the library, Verify, Bench and
-  * tests.
+/** Session + table-loading helpers shared by the library, Verify and tests.
   *
   * Design notes for scale (the engine targets a 1000-executor cluster even
   * though CI runs `local[32]`):

@@ -11417,7 +11417,7 @@ object SparkEntry {
     // time-travel horizon) that q228/q255 write paths leave untested.
     "q307_snapshot_retention" -> Q(
       (s, dir) => {
-        // per-process suffix: two concurrent Verify/Bench runs against
+        // per-process suffix: two concurrent Verify runs against
         // the same dataset must not race on resetTable/publish/vacuum of
         // a shared generation audit (ADVICE r9); the result columns never
         // expose the path, so the oracle is unaffected

@@ -382,11 +382,16 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val warehouse: String = Files.createTempDirectory("graft-wh").toString
-    private val checkpoint = Files.createTempDirectory("graft-ck").toString
+    val checkpoint: String = Files.createTempDirectory("graft-ck").toString
     private val mem = MemoryStream[String]
 
     def feedJson(lines: Seq[String]): StreamingQuery = {
       mem.addData(lines)
+      restart()
+    }
+
+    /** Runs the query from its checkpoint over whatever is not yet committed. */
+    def restart(): StreamingQuery = {
       val q = StreamPipeline.writeHourly(mem.toDF().select(col("value")),
         warehouse, checkpoint, Trigger.AvailableNow())(spark)
       q.awaitTermination()
@@ -509,6 +514,50 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getAs[Timestamp]("timestamp").toInstant, r.getAs[Double]("temperature"))).toSet
     assert(rows == Set((Instant.parse("2024-06-01T09:30:00Z"), 1.0),
       (Instant.parse("2024-06-01T10:30:00Z"), 2.0)))
+  }
+
+  test("writeHourly W3: a batch re-run after a crash between its write and " +
+      "its commit lands exactly once, with the state of an uninterrupted run") {
+    val crashed = new HourlyConsumer
+    val steady = new HourlyConsumer
+    val batch0 = Seq(obs("S1", "2024-06-01 10:00:00", 1.0),
+      obs("S2", "2024-06-01 10:00:00", 2.0))
+    val batch1 = Seq(obs("S1", "2024-06-01 11:00:00", 3.0),
+      obs("S1", "2024-06-01 11:20:00", 4.0),
+      obs("S2", "2024-06-01 12:00:00", 5.0))
+    for (c <- Seq(crashed, steady)) { c.feed(batch0); c.feed(batch1) }
+
+    // the crash: batch 1's output is written but its commit is not, so the
+    // restart re-runs batch 1 from the offset log over the state of batch 0
+    val commits = new File(crashed.checkpoint, "commits")
+    assert(new File(commits, "1").delete())
+    val crc = new File(commits, ".1.crc")
+    assert(!crc.exists() || crc.delete())
+    val q = crashed.restart()
+    assert(q.exception.isEmpty)
+    assert(new File(commits, "1").exists())
+
+    def rows(c: HourlyConsumer): Seq[String] =
+      spark.read.parquet(c.warehouse).collect().map(_.mkString("|")).sorted.toSeq
+    assert(crashed.batchDirs == Set("batch_id=0", "batch_id=1"))
+    assert(crashed.batchDirs == steady.batchDirs)
+    assert(rows(crashed).size == 4)
+    assert(rows(crashed).distinct == rows(crashed))
+    assert(rows(crashed) == rows(steady))
+
+    // equal high-water marks: each station's latest reading replayed is
+    // dropped by both, and only the newer reading lands
+    for (c <- Seq(crashed, steady))
+      c.feed(Seq(obs("S1", "2024-06-01 11:20:00", 9.0),
+        obs("S2", "2024-06-01 12:00:00", 9.0),
+        obs("S2", "2024-06-01 13:00:00", 6.0)))
+    for (c <- Seq(crashed, steady)) {
+      val landed = spark.read.parquet(s"${c.warehouse}/batch_id=2").collect()
+        .map(r => (r.getAs[String]("station_id"), r.getAs[Timestamp]("timestamp"),
+          r.getAs[Double]("temperature"))).toSeq
+      assert(landed == Seq(("S2", ts("2024-06-01 13:00:00"), 6.0)))
+    }
+    assert(rows(crashed) == rows(steady))
   }
 
   test("StreamNearDup: stateless append-mode near-dup flags against a " +
