@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
   *     splitting replace hand-tuned partition counts at 100 TB.
   *   - session time zone is pinned to UTC (the reference normalizes all
   *     timestamps to UTC — /root/reference/src/data_processing/fmi_client.py:168).
+  *   - `file:` URIs use [[NioLocalFileSystem]] / [[NioLocalFs]], because
+  *     stock Hadoop without libhadoop forks a `chmod` or `readlink` process
+  *     per local file it creates or renames (~120 per streaming micro-batch).
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder =
@@ -31,6 +34,12 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      // Hadoop caches a FileSystem by scheme and user, not by conf: a `file:`
+      // one made in this JVM before the first session stays stock (the sink
+      // forks again, still correct). Each entry point builds its session
+      // first. FileContext (checkpoints, state store) is never cached.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -1,6 +1,9 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -12,7 +15,8 @@ import graft.streaming.StreamPipeline
   * of graft.streaming): wire JSON through a MemoryStream source → parse →
   * per-key monotonic dedup (checkpointed state) → hourly keep-last prep →
   * parquet warehouse append, across two micro-batches with a replay and an
-  * out-of-order record in the second. Prints the warehouse after each batch.
+  * out-of-order record in the second. Prints the warehouse after each batch
+  * and deletes its temporary warehouse and checkpoint afterwards.
   *
   * Usage: sbt "runMain graft.StreamDemo"
   */
@@ -41,18 +45,20 @@ object StreamDemo {
         .show(20, truncate = false)
     }
 
-    runBatch("batch 1 (two readings in one hour -> keep-last)", Seq(
-      rec("101104", "2024-06-01T10:00:00Z", 12.4),
-      rec("101104", "2024-06-01T10:10:00Z", 12.9),
-      rec("100971", "2024-06-01T10:00:00Z", 11.8)))
+    try {
+      runBatch("batch 1 (two readings in one hour -> keep-last)", Seq(
+        rec("101104", "2024-06-01T10:00:00Z", 12.4),
+        rec("101104", "2024-06-01T10:10:00Z", 12.9),
+        rec("100971", "2024-06-01T10:00:00Z", 11.8)))
 
-    runBatch("batch 2 (replay + out-of-order dropped by watermark, new hour passes)", Seq(
-      rec("101104", "2024-06-01T10:10:00Z", 99.0), // replay → dropped
-      rec("101104", "2024-06-01T09:00:00Z", 99.0), // older → dropped
-      rec("101104", "2024-06-01T11:00:00Z", 13.3))) // newer → appended
+      runBatch("batch 2 (replay + out-of-order dropped by watermark, new hour passes)", Seq(
+        rec("101104", "2024-06-01T10:10:00Z", 99.0), // replay → dropped
+        rec("101104", "2024-06-01T09:00:00Z", 99.0), // older → dropped
+        rec("101104", "2024-06-01T11:00:00Z", 13.3))) // newer → appended
 
-    println(s"rows persisted >= 3: " +
-      StreamPipeline.verifyRowPersistence(spark, warehouse, 3))
+      println(s"rows persisted >= 3: " +
+        StreamPipeline.verifyRowPersistence(spark, warehouse, 3))
+    } finally Seq(warehouse, checkpoint).foreach(d => FileUtils.deleteDirectory(new File(d)))
 
     // windowed streaming aggregation face (W5): hourly stats over a stream
     import org.apache.spark.sql.functions.col

@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
   */
 class ProductAnalyticsBoundarySpec extends SparkSpec {
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-fixture").toString
-
   private def writeEvents(dir: String, rows: Seq[(String, String, String)]): Unit = {
     import spark.implicits._
     rows.toDF("user_id", "event_type", "__ts")
@@ -32,7 +29,7 @@ class ProductAnalyticsBoundarySpec extends SparkSpec {
 
   test("q124 funnel: out-of-order stages do not count; stage-equal " +
       "timestamps do (>= semantics)") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-fixture")
     writeEvents(dir, Seq(
       // A: clean view -> click -> purchase (all three stages)
       ("A", "view", "2024-01-01 10:00:00"),
@@ -58,7 +55,7 @@ class ProductAnalyticsBoundarySpec extends SparkSpec {
 
   test("q125 DAU/WAU: a user active on exactly day t-6 is in WAU(t); " +
       "day t-7 is not") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-fixture")
     writeEvents(dir, Seq(
       ("u", "view", "2024-01-01 12:00:00"),            // day D
       ("w", "view", "2024-01-07 12:00:00"),            // day D+6
@@ -74,7 +71,7 @@ class ProductAnalyticsBoundarySpec extends SparkSpec {
 
   test("q126 cohort retention: day 6 stays in week_offset 0, day 7 rolls " +
       "to week_offset 1") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-fixture")
     writeEvents(dir, Seq(
       ("x", "view", "2024-01-01 08:00:00"),            // cohort day C
       ("x", "view", "2024-01-07 08:00:00"),            // C+6 -> offset 0
@@ -90,7 +87,7 @@ class ProductAnalyticsBoundarySpec extends SparkSpec {
 
   test("q130 conversion lag: purchase before the first view never yields " +
       "a negative-lag row; the 3600 s histogram edge floors correctly") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-fixture")
     writeEvents(dir, Seq(
       // A: only purchase is BEFORE the first view -> no qualifying
       // purchase, A contributes no lag row at all
@@ -112,7 +109,7 @@ class ProductAnalyticsBoundarySpec extends SparkSpec {
   test("q131 Benford: zero, negative, and sub-1 prices are outside the " +
       "domain; the digit comes from the integer part") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = tempDir("graft-fixture")
     Seq(0.5, -123.0, 0.0, 1.0, 9.99, 123.45, 987.0)
       .toDF("l_extendedprice")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -138,7 +135,7 @@ class ProductAnalyticsBoundarySpec extends SparkSpec {
 
   test("q212 decay attribution: whole-day halving at exactly 24h, window " +
       "edge at exactly/over 7 days") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-fixture")
     writeEventsFull(dir, Seq(
       // user 1: two views — 26h before (d=1, weight 5e5, hour 10) and
       // 2h before (d=0, weight 1e6, hour 10 previous day → hour 10? no:)
@@ -164,7 +161,7 @@ class ProductAnalyticsBoundarySpec extends SparkSpec {
 
   test("q218 churn: Sunday-night vs Monday-morning week edge; churn " +
       "counted in the absent week; first week is all-new") {
-    val dir = tmpDir()
+    val dir = tempDir("graft-fixture")
     writeEvents(dir, Seq(
       ("A", "view", "2024-01-02 10:00:00"),  // week of Mon 2024-01-01
       ("A", "view", "2024-01-09 10:00:00"),  // week of Mon 2024-01-08

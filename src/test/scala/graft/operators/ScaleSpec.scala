@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -93,7 +91,7 @@ class ScaleSpec extends SparkSpec {
 
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("graft-bucket-wh").toString
+    val wh = tempDir("graft-bucket-wh")
     val facts = (1 to 1000).map(i => (i % 50, i.toDouble)).toDF("key", "v")
     val dims = (0 until 50).map(i => (i, s"label$i")).toDF("key", "label")
     facts.write.mode("overwrite").bucketBy(8, "key").sortBy("key")
@@ -119,7 +117,7 @@ class ScaleSpec extends SparkSpec {
       ("S3", "2024-01-01 00:00:00", 3.0))
       .toDF("station_id", "ts", "v")
       .withColumn("ts", col("ts").cast("timestamp"))
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part")
     Analytics.writePartitioned(df, "station_id", "ts", dir)
     // layout: one directory per station
     assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("station_id=")) == 3)

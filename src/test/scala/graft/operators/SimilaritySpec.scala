@@ -662,7 +662,7 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 10)
     val (cellRel, centRel) = Similarity.ivfIndexRelations(emb, "vec_id",
       "embedding", nlist = 16, iters = 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-idx")
+    val dir = tempDir("graft-ivf-idx")
     cellRel.write.parquet(s"$dir/cells")
     centRel.write.parquet(s"$dir/cents")
     graft.CacheScope.releaseAll()

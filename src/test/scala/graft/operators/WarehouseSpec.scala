@@ -23,7 +23,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("compact + publish: same rows, fewer files, old generation cleaned") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-wh-compact").toString + "/t"
+    val dir = tempDir("graft-wh-compact") + "/t"
     // simulate micro-batch small-file pathology: 8 appends of 5 rows
     (0 until 8).foreach { b =>
       (0 until 5).map(i => (b * 5 + i, s"v$b-$i")).toDF("id", "v")
@@ -45,7 +45,7 @@ class WarehouseSpec extends SparkSpec {
   test("recoverSwap rolls back a crash between the two publish renames " +
       "(missing live dir + surviving .old)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-wh-crash").toString + "/t"
+    val dir = tempDir("graft-wh-crash") + "/t"
     (1 to 10).toDF("id").write.parquet(dir)
     // simulate the crash window: old generation moved aside, new one never
     // renamed in — readers would find NO live directory
@@ -64,7 +64,7 @@ class WarehouseSpec extends SparkSpec {
   test("publishVersioned: manifest flip is the commit — readers always " +
       "resolve a complete generation, crashed publishes are invisible") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-versioned").toString + "/t"
+    val table = tempDir("graft-wh-versioned") + "/t"
     val g1 = Warehouse.publishVersioned(spark, (1 to 10).toDF("id"), table)
     assert(g1 == "gen-00000001")
     assert(Warehouse.readVersioned(spark, table).count() == 10)
@@ -94,7 +94,7 @@ class WarehouseSpec extends SparkSpec {
   test("publish self-heals from a crash after the final rename but " +
       "before .old cleanup (stale .old must not wedge the table)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-wh-staleold").toString + "/t"
+    val dir = tempDir("graft-wh-staleold") + "/t"
     (1 to 10).toDF("id").write.parquet(dir)
     // simulate: previous publish completed its renames but died before
     // deleting the superseded generation
@@ -122,12 +122,12 @@ class WarehouseSpec extends SparkSpec {
     val files = 16
 
     // layout A: plain range-partition on ts (the q-style single-column sort)
-    val tA = Files.createTempDirectory("graft-wh-zorder").toString + "/plain"
+    val tA = tempDir("graft-wh-zorder") + "/plain"
     Warehouse.publishVersioned(spark,
       events.repartitionByRange(files, col("ts")), tA,
       statsCols = Seq("ts", "user_id"))
     // layout B: z-ordered on (ts, user_id)
-    val tB = Files.createTempDirectory("graft-wh-zorder").toString + "/zord"
+    val tB = tempDir("graft-wh-zorder") + "/zord"
     Warehouse.publishVersioned(spark,
       Warehouse.zorderBy(events, "ts", "user_id", files), tB,
       statsCols = Seq("ts", "user_id"))
@@ -160,7 +160,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("schema evolution across generations + time travel reads") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-evolve").toString + "/t"
+    val table = tempDir("graft-wh-evolve") + "/t"
     val g1 = Warehouse.publishVersioned(spark,
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), table)
     // atomic schema change: next generation adds a column
@@ -183,7 +183,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("stats-based file pruning: a day-slice reads fewer files, same rows") {
-    val table = Files.createTempDirectory("graft-wh-stats").toString + "/events"
+    val table = tempDir("graft-wh-stats") + "/events"
     // 10 days of events, range-partitioned on ts so files carry tight
     // ranges (the layout a real ingest produces when data arrives in time
     // order). 8 files over 10 days → a one-day slice must prune most.
@@ -216,7 +216,7 @@ class WarehouseSpec extends SparkSpec {
     assert(pruned.sameElements(expect) && expect.nonEmpty)
 
     // a generation published WITHOUT stats falls back to the full scan
-    val t2 = Files.createTempDirectory("graft-wh-nostats").toString + "/e2"
+    val t2 = tempDir("graft-wh-nostats") + "/e2"
     Warehouse.publishVersioned(spark, full.limit(100), t2)
     assert(Warehouse.pruneCandidates(spark, t2, "ts", dayLo, dayHi).isEmpty)
     assert(Warehouse.readVersionedRange(spark, t2, "ts", dayLo, dayHi).count() ==
@@ -273,8 +273,8 @@ class WarehouseSpec extends SparkSpec {
   test("Delta-log round trip: publishVersioned x3 -> exportDeltaLog -> " +
       "importDeltaLog reproduces every version's rows and the history depth") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-delta").toString + "/t"
-    val dest = Files.createTempDirectory("graft-wh-delta").toString + "/imported"
+    val table = tempDir("graft-wh-delta") + "/t"
+    val dest = tempDir("graft-wh-delta") + "/imported"
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
       df.select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -323,7 +323,7 @@ class WarehouseSpec extends SparkSpec {
   test("deletion vectors: soft delete hides keys without a rewrite, " +
       "re-delete is idempotent, appends union, compact purges physically") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-dv").toString + "/t"
+    val table = tempDir("graft-wh-dv") + "/t"
     val gen1 = Warehouse.publishVersioned(spark,
       (1L to 10L).map(i => (i, s"row$i")).toDF("id", "v"), table)
     // soft delete two keys
@@ -353,8 +353,8 @@ class WarehouseSpec extends SparkSpec {
       "read after deleteWhere excludes the deleted keys, and new " +
       "tombstones refresh an existing export") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-dv-delta").toString + "/t"
-    val dest = Files.createTempDirectory("graft-wh-dv-delta").toString + "/imp"
+    val table = tempDir("graft-wh-dv-delta") + "/t"
+    val dest = tempDir("graft-wh-dv-delta") + "/imp"
     Warehouse.publishVersioned(spark,
       (1L to 10L).map(i => (i, s"row$i")).toDF("id", "v"), table)
     assert(Warehouse.deleteWhere(spark, table, "id", col("id") <= 3L) == 3L)
@@ -413,8 +413,7 @@ class WarehouseSpec extends SparkSpec {
       "matches the plain groupBy bit-for-bit") {
     import spark.implicits._
     val df = (1 to 1000).map(i => (i.toLong % 37, i.toLong)).toDF("k", "v")
-    val path = java.nio.file.Files.createTempDirectory("graft_bkt")
-      .toString + "/t"
+    val path = tempDir("graft_bkt") + "/t"
     Warehouse.writeBucketed(spark, df, "graft_bkt_spec", path, "k", 8)
     val agg = spark.table("graft_bkt_spec").groupBy("k")
       .agg(sum(col("v")).as("s"))
@@ -448,7 +447,7 @@ class WarehouseSpec extends SparkSpec {
   test("compactExecute: small files merge into size bins, tombstones " +
       "materialize, history serves the pre-compaction generation") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-optimize").toString + "/t"
+    val table = tempDir("graft-wh-optimize") + "/t"
     val g1 = Warehouse.publishVersioned(spark,
       (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
         .repartition(16), table)
@@ -484,7 +483,7 @@ class WarehouseSpec extends SparkSpec {
       "manifest, dirty batch is quarantined with the live table intact") {
     import spark.implicits._
     import graft.operators.Quality.Expectation._
-    val table = Files.createTempDirectory("graft-wh-wap").toString + "/t"
+    val table = tempDir("graft-wh-wap") + "/t"
     val rules = Seq(NotNull("id_not_null", "id"),
       InRange("v_range", "v", 0.0, 100.0))
     val clean = Seq((Some(1L), 10.0), (Some(2L), 20.0)).toDF("id", "v")
@@ -522,7 +521,7 @@ class WarehouseSpec extends SparkSpec {
       "data write; a pre-existing claim is skipped past, never reused " +
       "(r10 verdict #6)") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-cas").toString + "/t"
+    val table = tempDir("graft-wh-cas") + "/t"
     val g1 = Warehouse.publishVersioned(spark, (1 to 10).toDF("id"), table)
     // the race window, deterministically: two writers computed the same
     // next number; the first claim wins, the second throws retryable
@@ -548,7 +547,7 @@ class WarehouseSpec extends SparkSpec {
       "corrupt the chain — the live snapshot is exactly ONE writer's " +
       "rows and every committed generation is intact") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-race").toString + "/t"
+    val table = tempDir("graft-wh-race") + "/t"
     Warehouse.publishVersioned(spark, (1 to 3).toDF("id"), table)
     val dsA = (1 to 100).toDF("id")
     val dsB = (201 to 400).toDF("id")
@@ -598,7 +597,7 @@ class WarehouseSpec extends SparkSpec {
   test("monotone live pointer: a slower writer committing an OLDER " +
       "claimed slot cannot flip the table backward") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-mono").toString + "/t"
+    val table = tempDir("graft-wh-mono") + "/t"
     Warehouse.publishVersioned(spark, (1 to 3).toDF("id"), table)
     // writer X claims gen-2 but stalls (claim only — simulate by hand)
     Files.createFile(java.nio.file.Paths.get(table, "gen-00000002.claim"))
@@ -622,7 +621,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("hidden partitioning: day(ts) layout prunes by day, reads exact rows") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-hidden").toString + "/t"
+    val table = tempDir("graft-wh-hidden") + "/t"
     // 4 days x 4 rows, on the hour
     val rows = for (d <- 1 to 4; h <- Seq(0, 6, 12, 18))
       yield (d * 100 + h, f"2024-03-0$d $h%02d:30:00")
@@ -651,7 +650,7 @@ class WarehouseSpec extends SparkSpec {
   test("partition evolution: g1 day(ts), g2 hour(ts) — each generation " +
       "prunes under its OWN stored transform, live and time-travel") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-evolution").toString + "/t"
+    val table = tempDir("graft-wh-evolution") + "/t"
     val rows = for (d <- 1 to 3; h <- Seq(0, 8, 16))
       yield (d * 100 + h, f"2024-03-0$d $h%02d:15:00")
     val df = rows.toDF("id", "s")
@@ -688,7 +687,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("hidden bucket transform: equality read prunes to one bucket dir") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-wh-bucket").toString + "/t"
+    val table = tempDir("graft-wh-bucket") + "/t"
     val df = (1L to 200L).toDF("id").withColumn("v", col("id") * 10)
     Warehouse.publishHiddenPartitioned(spark, df, table,
       Warehouse.BucketTransform("id", 8))

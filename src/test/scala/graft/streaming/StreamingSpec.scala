@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
@@ -337,8 +336,8 @@ class StreamingSpec extends SparkSpec {
       "null purchase once the watermark proves no match can arrive") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val outDir = Files.createTempDirectory("graft-loj-out").toString
-    val ckDir = Files.createTempDirectory("graft-loj-ck").toString
+    val outDir = tempDir("graft-loj-out")
+    val ckDir = tempDir("graft-loj-ck")
     val views = MemoryStream[(String, Timestamp, Double)]
     val purchases = MemoryStream[(String, Timestamp, Double)]
     def runOnce(): Unit = {
@@ -381,8 +380,8 @@ class StreamingSpec extends SparkSpec {
   private class HourlyConsumer {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val warehouse: String = Files.createTempDirectory("graft-wh").toString
-    val checkpoint: String = Files.createTempDirectory("graft-ck").toString
+    val warehouse: String = tempDir("graft-wh")
+    val checkpoint: String = tempDir("graft-ck")
     private val mem = MemoryStream[String]
 
     def feedJson(lines: Seq[String]): StreamingQuery = {
@@ -558,6 +557,24 @@ class StreamingSpec extends SparkSpec {
       assert(landed == Seq(("S2", ts("2024-06-01 13:00:00"), 6.0)))
     }
     assert(rows(crashed) == rows(steady))
+  }
+
+  test("writeHourly keeps every checkpoint checksum: each state delta " +
+      "has Spark's checksum file, and log and state files their Hadoop .crc") {
+    val c = new HourlyConsumer
+    c.feed(Seq(obs("S1", "2024-06-01 10:00:00", 1.0),
+      obs("S2", "2024-06-01 10:00:00", 2.0)))
+    c.feed(Seq(obs("S1", "2024-06-01 11:00:00", 3.0)))
+    def names(dir: File): Set[String] = dir.listFiles().map(_.getName).toSet
+    for (log <- Seq("offsets", "commits"); n <- Seq(0, 1))
+      assert(Set(s"$n", s".$n.crc").subsetOf(names(new File(c.checkpoint, log))), log)
+    val partitions = new File(c.checkpoint, "state/0").listFiles()
+      .filter(_.getName.forall(_.isDigit))
+    assert(partitions.length == spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // state version v is written by batch v - 1
+    for (p <- partitions; v <- Seq(1, 2))
+      assert(Set(s"$v.delta", s".$v.delta.crc", s"$v.delta.crc", s".$v.delta.crc.crc")
+        .subsetOf(names(p)), p)
   }
 
   test("StreamNearDup: stateless append-mode near-dup flags against a " +
