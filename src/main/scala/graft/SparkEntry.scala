@@ -9675,7 +9675,7 @@ object SparkEntry {
 
     // Persisted-LSH-index incremental dedup — the production daily-ingest
     // architecture (q233's bucketed layout + q63's incremental-probe
-    // semantics + StreamNearDup's stream-static shape, composed): batch-1
+    // semantics + a stream-static probe shape, composed): batch-1
     // (even doc_ids) is indexed ONCE — band relation published bucketed
     // by `bucket`, shingle-doc relation bucketed by `id`
     // ([[operators.Warehouse.writeBucketed]]) — then batch-2 (odd

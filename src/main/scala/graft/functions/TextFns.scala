@@ -59,9 +59,6 @@ object TextFns {
   def prefixFingerprint(c: Column, len: Int): Column =
     md5(substring(normalized(c), 1, len))
 
-  /** 60-bit rolling-hash-style numeric fingerprint (see Hashing.h60). */
-  def fingerprint60(c: Column): Column = Hashing.h60(normalized(c))
-
   /** LUHN checksum sum over a digit string (the card/IMEI check every
     * PII scanner runs to cut regex false positives — a 16-digit regex
     * hit that fails Luhn is a random number, not a card). From the

@@ -418,22 +418,17 @@ object Dedup {
   }
 
   /** Signature rows → (id, band, bucket) banding relation (`bands` rows
-    * per doc). Shared by the self-join candidate path, the cross-corpus
-    * decontamination path, and the streaming flag path
-    * ([[graft.streaming.StreamNearDup]], which also threads `carry`
-    * columns through the explode — a streaming consumer cannot join the
-    * carried array back by id without a stream-stream join). */
-  private[graft] def lshBands(sigs: DataFrame, k: Int, bands: Int,
-      carry: Seq[String] = Nil): DataFrame = {
+    * per doc). Shared by the self-join candidate path, the persisted LSH
+    * index and the cross-corpus decontamination path. */
+  private[graft] def lshBands(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, s"k=$k not divisible by bands=$bands")
     val r = k / bands
     val bandCols = (0 until bands).map { b =>
       val slots = (b * r until (b + 1) * r).map(i => col(s"s$i"))
       struct(lit(b).as("band"), Hashing.hFast(concat_ws(",", slots: _*), b).as("bucket"))
     }
-    val kept = col("id") +: carry.map(col)
-    sigs.select(kept :+ explode(array(bandCols: _*)).as("bb"): _*)
-      .select(kept :+ col("bb.band").as("band") :+ col("bb.bucket").as("bucket"): _*)
+    sigs.select(col("id"), explode(array(bandCols: _*)).as("bb"))
+      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
   /** Full MinHash near-dup pipeline: shingle → sign → band → candidate →
@@ -491,9 +486,8 @@ object Dedup {
   }
 
   /** Probe a NEW batch against a persisted [[lshIndexRelations]] index —
-    * the stream-static near-dup join ([[graft.streaming.StreamNearDup]])
-    * in its batch form. The new docs run the same shingle/sign/band
-    * projections; candidates are (band, bucket) equi-join hits against
+    * a stream-static near-dup join in its batch form. The new docs run
+    * the same shingle/sign/band projections; candidates are (band, bucket) equi-join hits against
     * the STORED band relation; the exact-Jaccard confirm fetches shingle
     * arrays from the stored doc relation (id_a side) and the new batch
     * (id_b side). LSH only prunes — the confirm decides — so the result

@@ -94,22 +94,11 @@ object Quality {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** A7 — distinct count (`/root/reference/visualization/app.py:86`).
-    * Exact; at 100 TB prefer [[approxDistinctCount]].
+  /** A7 — distinct count (`visualization/app.py:86`) at scale: HLL
+    * sketch, one pass, no shuffle of distinct values.
     */
-  def distinctCount(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.agg(
-      countDistinct(col(cols.head), cols.tail.map(col).toIndexedSeq: _*).as("n_distinct"))
-
-  /** A7 at scale: HLL sketch, one pass, no shuffle of distinct values. */
   def approxDistinctCount(df: DataFrame, c: String, rsd: Double = 0.01): DataFrame =
     df.agg(approx_count_distinct(col(c), rsd).as("n_distinct_approx"))
-
-  /** A8 — load verification (`kafka_stream.py:161-193`): sink row count must
-    * cover the expected count.
-    */
-  def verifyRowPersistence(sink: DataFrame, expected: Long): Boolean =
-    sink.count() >= expected
 
   /** Robust outlier stats per group: median and MAD (median absolute
     * deviation) of `valCol`, plus how many rows sit more than

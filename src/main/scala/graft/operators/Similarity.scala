@@ -982,8 +982,9 @@ object Similarity {
     * is pure per-row projections (centroid scoring, probe-cell explode)
     * plus ONE stream-static inner join against the persisted cell
     * relation and a filter — no aggregation, no sort, no watermark, no
-    * state store (the [[graft.streaming.StreamNearDup]] contract; top-k
-    * is a stream AGGREGATION, so the ranked face stays batch — run it in
+    * state store, so each micro-batch's flags depend on that batch alone
+    * and nothing accumulates across batches (top-k is a stream
+    * AGGREGATION, so the ranked face stays batch — run it in
     * a foreachBatch sink if per-query ranking matters per micro-batch).
     * Per-query independence makes cross-batch flags ≡ one batch probe
     * over the union, spec-pinned in StreamingSpec.

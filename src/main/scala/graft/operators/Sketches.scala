@@ -254,11 +254,9 @@ object Sketches {
       .orderBy(groupCol)
   }
 
-  /** BATCH FACE of the streaming Space-Saving summary
-    * ([[graft.streaming.HeavyHitters]] — Metwally et al. 2005) via the
-    * MERGE LAW (Agarwal et al. 2012, mergeable summaries), so the one
-    * streaming operator whose math had no CORRECTNESS row gets a
-    * value-exact oracle (r10 verdict #5). The stream-order-dependent
+  /** The Space-Saving summary (Metwally et al. 2005) in batch form via
+    * the MERGE LAW (Agarwal et al. 2012, mergeable summaries), which
+    * gives its math a value-exact oracle. The stream-order-dependent
     * sequential admit/evict is NOT replayable across engines; the merge
     * law is: a Space-Saving-type summary is m counters (token,
     * count ≥ true, err with count − err ≤ true) plus an eviction FLOOR

@@ -14,7 +14,7 @@ import graft.schema.Observation
 /** The Structured Streaming rendering of the reference's
   * producer → Kafka → consumer → warehouse pipeline (SURVEY.md §2.9, §3):
   * the hand-rolled poll/buffer/flush loop (`kafka_stream.py:335-361`), the
-  * JSON codec (`:60, :299`), the per-key watermark dedup (`:237-284`) and
+  * JSON decode (`:299`), the per-key watermark dedup (`:237-284`) and
   * the append sink with verification (`:195-217`) collapse into one
   * streaming query with a checkpoint.
   *
@@ -35,11 +35,6 @@ object StreamPipeline {
     "subscribe" -> topic,
     "startingOffsets" -> "earliest",
     "maxOffsetsPerTrigger" -> "500")
-
-  /** S4 — observations → Kafka-wire JSON (`kafka_stream.py:60`). */
-  def toWire(obs: DataFrame): DataFrame =
-    obs.select(col("station_id").cast("string").as("key"),
-      to_json(struct(obs.columns.map(col).toIndexedSeq: _*)).as("value"))
 
   /** S5 — wire JSON → typed observation rows (`kafka_stream.py:299` +
     * `fmi_client.py:158-171`): parse with the explicit wire schema (never
@@ -145,91 +140,6 @@ object StreamPipeline {
       .select(col("w.start").as("hour"), col("station_id"), col("n"),
         col("avg_temperature"), col("max_wind_speed"))
 
-  /** Streaming sessionization — the streaming face of the batch
-    * sessionize operator (q33): events of a key separated by less than
-    * `gap` of event-time silence coalesce into one session row via
-    * `session_window` (dynamic, gap-merged windows — not expressible by
-    * tumbling windows). Watermarked, so an open session's state is
-    * evicted once the watermark passes its close: state is bounded by
-    * ACTIVE sessions per key, never by history. Works identically on
-    * batch frames (the watermark is a no-op there).
-    */
-  def sessionStats(events: DataFrame, keyCol: String, tsCol: String,
-      gap: String, lateness: String = "1 hour"): DataFrame =
-    events.withWatermark(tsCol, lateness)
-      .groupBy(session_window(col(tsCol), gap).as("w"), col(keyCol))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col(keyCol), col("n_events"))
-
-  /** Streaming drift monitor — the streaming face of the batch PSI
-    * report (q139): each tumbling window's value histogram is compared
-    * to a REFERENCE histogram (the small per-bucket counts of a
-    * training/baseline corpus, provided by the driver), emitting one
-    * add-one-smoothed PSI row per closed window. The histogram is
-    * unrolled into per-bucket sum columns of a SINGLE windowed
-    * aggregation (one stateful operator, watermark-bounded state —
-    * chained streaming aggregations would need a second state store),
-    * and the PSI arithmetic is a stateless projection after it. Works
-    * identically on batch frames (the watermark is a no-op).
-    */
-  def driftMonitor(df: DataFrame, tsCol: String, valueCol: String,
-      lo: Double, hi: Double, reference: Seq[Long],
-      windowLen: String = "1 hour", lateness: String = "1 hour"): DataFrame = {
-    require(reference.nonEmpty && hi > lo, "need buckets and a real range")
-    val nb = reference.size
-    val nRef = reference.sum
-    val bucket = least(lit(nb - 1), greatest(lit(0),
-      floor((col(valueCol) - lo) * nb / (hi - lo)).cast("int")))
-    val counts = (0 until nb).map(b =>
-      sum(when(col("__b") === b, 1L).otherwise(0L)).as(s"c$b"))
-    val agg = df.filter(col(valueCol).isNotNull)
-      .withColumn("__b", bucket)
-      .withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), windowLen).as("w"))
-      .agg(counts.head, counts.tail: _*)
-    val nCur = (0 until nb).map(b => col(s"c$b")).reduce(_ + _)
-    val psi = (0 until nb).map { b =>
-      val pc = (col(s"c$b") + 1.0) / (nCur + nb)
-      val pr = lit((reference(b) + 1.0) / (nRef.toDouble + nb))
-      (pc - pr) * (log(pc) - log(pr))
-    }.reduce(_ + _)
-    agg.select(col("w.start").as("window_start"), nCur.as("n_events"),
-      psi.as("psi"))
-  }
-
-  /** Streaming exact dedup with BOUNDED state (the W2 replay-drop for
-    * arbitrary keys): duplicate rows on `keys` arriving within the
-    * event-time watermark horizon are dropped, and per-key state is
-    * evicted once the watermark passes its timestamp — so state is
-    * O(keys per lateness window), not O(all keys ever) as with plain
-    * `dropDuplicates` on a stream. Use when the dedup key is an event id
-    * replayed by at-least-once sources; [[dedupMonotonic]] remains the
-    * per-key ordered-stream form.
-    */
-  def dedupWithinWatermark(df: DataFrame, tsCol: String, lateness: String,
-      keys: Seq[String]): DataFrame =
-    df.withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Streaming incremental ingestion dedup — the streaming face of
-    * [[graft.operators.Dedup.incrementalDedup]]: a STREAM-STATIC
-    * left-anti join drops rows whose fingerprint is already in the
-    * published corpus (the static side is re-planned per micro-batch, so
-    * readers pick up corpus updates between batches), then
-    * `dropDuplicatesWithinWatermark` removes within-stream replays with
-    * state bounded by the watermark horizon. The corpus side never
-    * holds streaming state — it is a plain table join per batch.
-    */
-  def incrementalDedupStream(stream: DataFrame, corpusFps: DataFrame,
-      fingerprint: org.apache.spark.sql.Column, tsCol: String,
-      lateness: String): DataFrame =
-    stream.withColumn("fingerprint", fingerprint)
-      .join(corpusFps.select(col("fingerprint")).distinct(),
-        Seq("fingerprint"), "left_anti")
-      .withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark("fingerprint")
-
   /** Watermarked stream-stream INNER interval join: each left row is
     * enriched by right rows with the same key whose timestamp falls in
     * `[leftTs - lookback, leftTs]` (e.g. views joined to the user's
@@ -250,26 +160,6 @@ object StreamPipeline {
         col(s"l.$key") === col(s"r.$key") &&
           col(s"r.$rightTs") >= col(s"l.$leftTs") - expr(s"INTERVAL $lookback") &&
           col(s"r.$rightTs") <= col(s"l.$leftTs"))
-      .drop(col(s"r.$key"))
-
-  /** LEFT OUTER [[intervalJoin]]: left rows with no in-window right match
-    * are still emitted (right side null) — but only once the watermark
-    * proves no match can arrive, so unmatched results trail the stream by
-    * the lateness + lookback bound instead of being wrong-then-retracted.
-    * Structured Streaming requires the watermark + time-range bound for
-    * exactly this reason: it is what makes "no match" a decidable,
-    * evictable fact. The "views that never converted" shape — the outer
-    * complement of the inner join's "views that converted".
-    */
-  def intervalJoinLeftOuter(left: DataFrame, right: DataFrame, key: String,
-      leftTs: String, rightTs: String, lookback: String,
-      lateness: String = "1 hour"): DataFrame =
-    left.withWatermark(leftTs, lateness).as("l")
-      .join(right.withWatermark(rightTs, lateness).as("r"),
-        col(s"l.$key") === col(s"r.$key") &&
-          col(s"r.$rightTs") >= col(s"l.$leftTs") - expr(s"INTERVAL $lookback") &&
-          col(s"r.$rightTs") <= col(s"l.$leftTs"),
-        "left_outer")
       .drop(col(s"r.$key"))
 
   /** A8 — post-load verification (`kafka_stream.py:161-193`): re-read the

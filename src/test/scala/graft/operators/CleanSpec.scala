@@ -115,21 +115,6 @@ class CleanSpec extends SparkSpec {
     assert(e == Timestamp.valueOf("2024-06-01 21:59:59.999999"))
   }
 
-  test("ObservationSource: schema-given JSON scan and typed records source") {
-    val fromJson = graft.sources.ObservationSource.fromJson(spark,
-      getClass.getResource("/sample_observations.json").getPath)
-    assert(fromJson.count() == 6)
-    // coercion projects to schema order/types (nullability is loosened by
-    // try_cast; the REQUIRED contract is enforced by validInvalidSplit)
-    assert(fromJson.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      graft.schema.Observation.schema.fields.map(f => (f.name, f.dataType)).toSeq)
-    val recs = graft.sources.ObservationSource.fromRecords(spark, Seq(
-      graft.schema.Observation("101104", Some("Helsinki"), Some(60.17),
-        Some(24.94), Some(19.0), Timestamp.valueOf("2024-06-01 10:00:00"),
-        Some(12.4), Some(63.0), Some(4.1))))
-    assert(recs.count() == 1 && recs.head().station_id == "101104")
-  }
-
   test("whitelist keeps only listed stations (test_build_long_term_tables)") {
     val out = Clean.whitelist(fixture.toDF(), "station_id", Seq("101104", "100971"))
     assert(out.select("station_id").distinct().count() == 2)

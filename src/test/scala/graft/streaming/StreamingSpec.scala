@@ -60,166 +60,6 @@ class StreamingSpec extends SparkSpec {
       (ts("2024-06-01 10:00:00"), "S2", 1L, 5.0)))
   }
 
-  test("driftMonitor: per-window PSI vs a reference histogram — matching " +
-      "window scores near zero, shifted window scores high") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Observation]
-    // reference: uniform over 2 buckets of [0, 10)
-    val reference = Seq(50L, 50L)
-    // hour 10: balanced (matches reference); hour 11: all mass in bucket 1
-    mem.addData(
-      obs("S1", "2024-06-01 10:05:00", 2.0),
-      obs("S1", "2024-06-01 10:10:00", 8.0),
-      obs("S1", "2024-06-01 11:05:00", 9.0),
-      obs("S1", "2024-06-01 11:10:00", 9.5),
-      obs("S1", "2024-06-01 11:15:00", 8.5))
-    val q = StreamPipeline.driftMonitor(mem.toDF(), "timestamp",
-        "temperature", 0.0, 10.0, reference)
-      .writeStream.format("memory").queryName("drift")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("drift").collect()
-      .map(r => r.getAs[Timestamp]("window_start") ->
-        (r.getAs[Long]("n_events"), r.getAs[Double]("psi"))).toMap
-    val (nBal, psiBal) = rows(ts("2024-06-01 10:00:00"))
-    val (nShift, psiShift) = rows(ts("2024-06-01 11:00:00"))
-    assert(nBal == 2L && nShift == 3L)
-    assert(psiBal >= 0.0 && psiShift > psiBal,
-      s"balanced $psiBal should undercut shifted $psiShift")
-    assert(psiShift > 0.1, s"fully-shifted window should alarm: $psiShift")
-  }
-
-  test("sessionStats: session_window merges events within the gap and " +
-      "splits on silence, per key") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Observation]
-    mem.addData(
-      obs("S1", "2024-06-01 10:00:00", 1.0),
-      obs("S1", "2024-06-01 10:10:00", 2.0),  // 10 min gap → same session
-      obs("S1", "2024-06-01 11:00:00", 3.0),  // 50 min silence → new session
-      obs("S2", "2024-06-01 10:05:00", 4.0))  // other key: own session
-    val q = StreamPipeline.sessionStats(mem.toDF(), "station_id",
-        "timestamp", gap = "15 minutes")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("sessions")
-      .collect().map(r => (r.getAs[Timestamp]("session_start"),
-        r.getAs[Timestamp]("session_end"), r.getAs[String]("station_id"),
-        r.getAs[Long]("n_events"))).toSet
-    assert(rows == Set(
-      // session end = last event + gap (session_window semantics)
-      (ts("2024-06-01 10:00:00"), ts("2024-06-01 10:25:00"), "S1", 2L),
-      (ts("2024-06-01 11:00:00"), ts("2024-06-01 11:15:00"), "S1", 1L),
-      (ts("2024-06-01 10:05:00"), ts("2024-06-01 10:20:00"), "S2", 1L)))
-  }
-
-  test("dedupWithinWatermark drops replayed keys within the horizon, " +
-      "bounded state (distinct event ids survive)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Double)]
-    mem.addData(
-      (1L, ts("2024-06-01 10:00:00"), 1.0),
-      (1L, ts("2024-06-01 10:05:00"), 99.0), // same event id replayed late
-      (2L, ts("2024-06-01 10:00:30"), 2.0))
-    val q = StreamPipeline.dedupWithinWatermark(
-        mem.toDF().toDF("event_id", "ts", "value"), "ts", "1 hour",
-        Seq("event_id"))
-      .writeStream.format("memory").queryName("wm_dedup")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("wm_dedup")
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(rows == Map(1L -> 1.0, 2L -> 2.0)) // first wins, replay dropped
-  }
-
-  test("StreamEwma: exact integer recursion continues across batches, " +
-      "batch order is (ts, tie)-deterministic, state is one long per key") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // rows: (key, eventTimeMillis, tie, vMicro)
-    val mem = MemoryStream[(String, Long, Long, Long)]
-    val q = StreamEwma.smooth(mem.toDS())
-      .toDF("key", "t", "v_micro", "ewma_micro")
-      .writeStream.format("memory").queryName("sewma")
-      .outputMode("append").start()
-    // batch 1 arrives out of order — absorbed ascending (t, tie):
-    // 1000000 → (1000000+3000000)/2 = 2000000
-    mem.addData(("a", 1L, 1L, 1000000L), ("a", 2L, 1L, 3000000L))
-    q.processAllAvailable()
-    // batch 2 continues the SAME recursion from checkpointed state:
-    // (2000000+5000001)/2 = 3500000 (truncating)
-    mem.addData(("a", 3L, 1L, 5000001L), ("b", 1L, 1L, 7L))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("sewma").collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
-    assert(out == Map(("a", 1L) -> 1000000L, ("a", 2L) -> 2000000L,
-      ("a", 3L) -> 3500000L, ("b", 1L) -> 7L))
-
-    // batch-mode call: same recursion, fresh state, tie order decides
-    val batch = Seq(("k", 5L, 2L, 100L), ("k", 5L, 1L, 300L))
-      .toDS()
-    val bout = StreamEwma.smooth(batch).collect()
-      .map(r => (r._2, r._3) -> r._4).toMap
-    // tie 1 first: s = 300; then v = 100: (300+100)/2 = 200
-    assert(bout == Map((5L, 300L) -> 300L, (5L, 100L) -> 200L))
-  }
-
-  test("StreamRollingMedian: exact trailing median continues across " +
-      "batches, warm-up guard holds, state is bounded") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // rows: (key, dayIndex, count) — the TemporalSpec fixture split
-    // across two micro-batches; the day-5 spike must be scored against
-    // state carried over from batch 1
-    val mem = MemoryStream[(String, Long, Long)]
-    val q = StreamRollingMedian.monitor(mem.toDS(), 7)
-      .writeStream.format("memory").queryName("srmed")
-      .outputMode("append").start()
-    mem.addData(("a", 1L, 4L), ("a", 2L, 5L), ("a", 3L, 4L))
-    q.processAllAvailable()
-    mem.addData(("a", 4L, 5L), ("a", 5L, 100L))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("srmed").collect()
-      .map(r => (r.getString(0), r.getLong(1)) ->
-        ((r.getInt(3), r.getLong(4), r.getBoolean(5)))).toMap
-    // identical to Temporal.rollingMedianAnomaly on the same counts:
-    // odd [4,4,5]→8; even [4,4,5,5]→9; [4,4,5,5,100]→10 and flags
-    assert(out == Map(
-      ("a", 1L) -> ((1, 8L, false)), ("a", 2L) -> ((2, 9L, false)),
-      ("a", 3L) -> ((3, 8L, false)), ("a", 4L) -> ((4, 9L, false)),
-      ("a", 5L) -> ((5, 10L, true))))
-  }
-
-  test("incrementalDedupStream: stream-static anti-join vs corpus, then " +
-      "bounded-state within-stream dedup") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.functions.TextFns
-    val corpus = Seq("known doc").toDF("text")
-      .select(TextFns.fingerprint(col("text")).as("fingerprint"))
-    val mem = MemoryStream[(Long, String, Timestamp)]
-    mem.addData(
-      (1L, "known doc", ts("2024-06-01 10:00:00")),   // in corpus → dropped
-      (2L, "fresh doc", ts("2024-06-01 10:01:00")),   // kept
-      (3L, "fresh doc", ts("2024-06-01 10:02:00")),   // stream replay → dropped
-      (4L, "another doc", ts("2024-06-01 10:03:00"))) // kept
-    val q = StreamPipeline.incrementalDedupStream(
-        mem.toDF().toDF("id", "text", "event_ts"), corpus,
-        TextFns.fingerprint(col("text")), "event_ts", "10 minutes")
-      .writeStream.format("memory").queryName("incdedup")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val kept = spark.table("incdedup").collect()
-      .map(_.getAs[Long]("id")).toSet
-    assert(kept == Set(2L, 4L))
-  }
-
   test("stream-static enrichment against the SCD2 CURRENT dimension view") {
     // The standard streaming enrichment: facts join the slowly-changing
     // dimension's is_current slice. Spark re-plans the static side per
@@ -250,50 +90,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getString(0) -> Option(r.getAs[String]("tier"))).toMap
     assert(out == Map("u1" -> Some("gold"), "u2" -> Some("silver"),
       "u3" -> None))
-  }
-
-  test("HeavyHitters: state stays bounded at m counters per bucket, " +
-      "space-saving guarantees hold across checkpointed micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // zipf-ish token stream, fed TWICE as separate micro-batches through
-    // a shared checkpoint; m is far smaller than the distinct-token
-    // count so eviction must happen
-    val zipf = (1 to 20).flatMap(i => Seq.fill(40 / i)(s"tok$i"))
-    val mem = MemoryStream[String]
-    val byBatch = scala.collection.mutable.Map.empty[Long, Array[(Int, String, Long, Long)]]
-    val q = HeavyHitters.topTokensStream(mem.toDS(), 2, 4)
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[HeavyHitter], id: Long) =>
-        byBatch.synchronized {
-          byBatch(id) = df.collect().map(h => (h.bucket, h.token, h.count, h.err))
-        }
-        ()
-      }
-      .start()
-    mem.addData(zipf: _*)
-    q.processAllAvailable()
-    mem.addData(zipf: _*) // second micro-batch: state must carry over
-    q.processAllAvailable()
-    q.stop()
-    // assert on the FINAL snapshot only (update mode re-emits per batch)
-    val snap = byBatch(byBatch.keys.max)
-    assert(snap.nonEmpty)
-    // bounded state: at most m counters per bucket, ever
-    snap.groupBy(_._1).foreach { case (b, rows) =>
-      assert(rows.length <= 4, s"bucket $b overflowed: ${rows.length}")
-    }
-    // guarantees vs the TOTAL (both batches) truth: estimate never below
-    // true, and count - err is a certified lower bound
-    val truth = (zipf ++ zipf).groupBy(identity).view.mapValues(_.size.toLong).toMap
-    snap.foreach { case (_, tok, c, e) =>
-      val t = truth(tok)
-      assert(c >= t, s"$tok: estimate $c below true $t")
-      assert(c - e <= t, s"$tok: lower bound ${c - e} above true $t")
-    }
-    // the overall top token cannot be evicted (tok1: 80 occurrences >
-    // any possible N_bucket/m)
-    assert(snap.exists(_._2 == "tok1"))
   }
 
   test("intervalJoin tolerates both sides naming their event-time column " +
@@ -330,42 +126,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows.length == 1)
     assert(rows(0).getAs[String]("user_id") == "u1")
     assert(rows(0).getAs[Double]("pval") == 99.0)
-  }
-
-  test("stream-stream LEFT OUTER interval join: unmatched views emit with " +
-      "null purchase once the watermark proves no match can arrive") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val outDir = tempDir("graft-loj-out")
-    val ckDir = tempDir("graft-loj-ck")
-    val views = MemoryStream[(String, Timestamp, Double)]
-    val purchases = MemoryStream[(String, Timestamp, Double)]
-    def runOnce(): Unit = {
-      val q = StreamPipeline.intervalJoinLeftOuter(
-          views.toDF().toDF("user_id", "vts", "vval"),
-          purchases.toDF().toDF("user_id", "pts", "pval"),
-          "user_id", "vts", "pts", "1 hour")
-        .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckDir)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // u1 converts within the hour; u2 never converts
-    views.addData(("u1", ts("2024-06-01 10:10:00"), 1.0),
-      ("u2", ts("2024-06-01 10:20:00"), 2.0))
-    purchases.addData(("u1", ts("2024-06-01 10:05:00"), 99.0))
-    runOnce()
-    // sentinels far past u2's join window advance BOTH watermarks (the
-    // join watermark is their min), making "u2 never matched" decidable
-    views.addData(("u9", ts("2024-06-01 15:00:00"), 9.0))
-    purchases.addData(("u9", ts("2024-06-01 14:59:00"), 9.0))
-    runOnce()
-    runOnce() // one more cycle so the advanced watermark evicts + emits
-    val rows = spark.read.parquet(outDir).collect()
-      .map(r => r.getAs[String]("user_id") ->
-        Option(r.getAs[Any]("pval"))).toMap
-    assert(rows("u1") == Some(99.0))   // matched: purchase value attached
-    assert(rows.contains("u2") && rows("u2").isEmpty) // unmatched: null right
   }
 
   private def wireJson(o: Observation): String =
@@ -575,45 +335,6 @@ class StreamingSpec extends SparkSpec {
     for (p <- partitions; v <- Seq(1, 2))
       assert(Set(s"$v.delta", s".$v.delta.crc", s"$v.delta.crc", s".$v.delta.crc.crc")
         .subsetOf(names(p)), p)
-  }
-
-  test("StreamNearDup: stateless append-mode near-dup flags against a " +
-      "static corpus — near-dup flagged, fresh doc passes, no state store") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // 40 tokens: one edited word flips only 3 of 38 trigrams →
-    // jaccard 35/41 ≈ 0.854, above the 0.8 gate (a short doc would
-    // dilute below it: 1 edit in 12 tokens → 7/13 ≈ 0.54)
-    val base = (1 to 40).map(i => f"tok$i%02d")
-    val corpus = Seq(
-      (100L, base.mkString(" ")),
-      (101L, "completely unrelated corpus text about warehouse partitions")
-    ).toDF("doc_id", "text")
-    val (arr0, bands0) = StreamNearDup.corpusIndex(corpus, "doc_id", "text",
-      3, 32, 8)
-    val (arr, bands) = (arr0.cache(), bands0.cache())
-    val mem = MemoryStream[(Long, String)]
-    val flags = StreamNearDup.flagNearDups(
-      mem.toDF().toDF("doc_id", "text"), arr, bands,
-      "doc_id", "text", 3, 32, 8, 0.8)
-    // data goes in before start: an AvailableNow query fixes its end
-    // offset when it starts, so rows added later may never be read
-    mem.addData(
-      // one-word edit of corpus doc 100 → jaccard 0.854, must flag
-      (1L, base.updated(19, "edited").mkString(" ")),
-      // fresh text → no flag row at all
-      (2L, "entirely novel content that matches nothing in the corpus"))
-    val q = flags.writeStream.format("memory").queryName("neardup_flags")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("neardup_flags")
-      .select("sid", "corpus_id").distinct()   // band collisions may repeat rows
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows == Set((1L, 100L)))
-    // and the plan really is stateless: no state-store operator ran
-    assert(q.lastProgress == null ||
-      Option(q.lastProgress.stateOperators).forall(_.isEmpty))
-    arr.unpersist(); bands.unpersist()
   }
 
   test("ivfIndexProbeFlags: stateless stream-static ANN flags against the " +
