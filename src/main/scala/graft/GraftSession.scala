@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   *   - `file:` URIs use [[NioLocalFileSystem]] / [[NioLocalFs]], because
   *     stock Hadoop without libhadoop forks a `chmod` or `readlink` process
   *     per local file it creates or renames (~120 per streaming micro-batch).
+  *   - the generated-code cache holds 1000 classes, not Spark's 100: one
+  *     `batch_read` cycle (13 queries) leaves 219-244 entries, driver and
+  *     task copies counted, and an LRU smaller than a repeating mix misses
+  *     on every query. Cluster executors read the same static setting from
+  *     the application conf; verified in `local` mode only.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder =
@@ -40,6 +45,17 @@ object GraftSession {
       // first. FileContext (checkpoints, state store) is never cached.
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+      // Spark's generated-code cache is an LRU of 100 classes by default. A
+      // repeating mix whose working set is larger misses on every lookup and
+      // recompiles each query's classes with Janino (a seed-2 batch_read
+      // run loads 628 generated classes at 100, 178 at 1000). The cache key
+      // pairs the code with a weakly held class loader, so a class compiled
+      // on the driver thread and again in a task thread takes two entries:
+      // one batch_read cycle of 13 queries fills 219-244. 1000 is ~4x that.
+      // A static conf: CodeGenerator reads it once per JVM, when it first
+      // loads, and every entry point builds its session here before it
+      // generates code.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -31,11 +31,14 @@ object Parallelism {
   // Why `.rdd` and not a planning-free probe: the true partition count of
   // a scan needs physical planning (file splitting by maxPartitionBytes —
   // `inputFiles.length` under-counts large files and over-counts tiny
-  // ones). The cost is driver-only and NOT paid twice in the common no-op
-  // branch: `df.rdd` materializes `df.queryExecution.executedPlan`, a
-  // lazy val the later action on the SAME df reuses. Only the repartition
-  // branch discards one child planning pass — ms-scale, once per query
-  // build, nothing at executor scale.
+  // ones). Over a plain scan the probe is driver-only planning, ms-scale.
+  // It is NOT free when the input plan has exchanges: `df.rdd` plans its
+  // own QueryExecution (not `df.queryExecution`), and building its RDD
+  // makes AQE run the adaptive plan's shuffle stages as Spark jobs to fix
+  // the final partitioning (3 jobs inside `shingleSets`' fan-out over the
+  // cached exact-dedup survivors). Over an uncached input the later action
+  // runs those stages again: `minhashNearDups` over uncached survivors runs
+  // 14 jobs instead of 12.
   def ensureMin(df: DataFrame, min: Int): DataFrame =
     if (df.rdd.getNumPartitions >= min) df else df.repartition(min)
 

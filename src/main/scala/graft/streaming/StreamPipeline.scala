@@ -163,9 +163,18 @@ object StreamPipeline {
       .drop(col(s"r.$key"))
 
   /** A8 — post-load verification (`kafka_stream.py:161-193`): re-read the
-    * sink and check the row count reached the expected floor.
+    * sink and check the row count reached the expected floor. A warehouse
+    * with no `batch_id=` directory (every batch was empty) holds 0 rows;
+    * the parquet reader would fail to infer its schema.
     */
   def verifyRowPersistence(spark: SparkSession, warehouseDir: String,
-      expectedAtLeast: Long): Boolean =
-    spark.read.parquet(warehouseDir).count() >= expectedAtLeast
+      expectedAtLeast: Long): Boolean = {
+    val dir = new Path(warehouseDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rows =
+      if (fs.listStatus(dir).exists(_.getPath.getName.startsWith("batch_id=")))
+        spark.read.parquet(warehouseDir).count()
+      else 0L
+    rows >= expectedAtLeast
+  }
 }

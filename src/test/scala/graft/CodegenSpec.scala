@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** Codegen-health gate (round-7 verdict items #1/#2).
@@ -21,6 +22,10 @@ import org.apache.spark.sql.functions._
   * expression must reproduce the replayable-oracle arithmetic exactly,
   * including the first-minimum tie-break and the min-length dot
   * convention.
+  *
+  * And pins the generated-code cache size set in [[GraftSession]]: a
+  * repeating mix of queries whose classes outnumber Spark's default 100
+  * entries must not recompile on its second pass.
   */
 class CodegenSpec extends SparkSpec {
 
@@ -104,6 +109,25 @@ class CodegenSpec extends SparkSpec {
       try run() finally spark.conf.set(key, prev)
     }
     assert(gen == interp)
+  }
+
+  test("a repeating mix of ~200 generated classes compiles once: the " +
+      "second pass hits the codegen cache") {
+    // each query inlines a distinct literal, so each is one new whole-stage
+    // class, cached twice (driver thread and task thread class loaders)
+    val queries = 100
+    def pass(): Unit = (0 until queries).foreach { i =>
+      spark.range(0, 4, 1, 2).selectExpr(s"id * 7 + $i AS v").collect()
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val before = compiles
+    pass()
+    val first = compiles - before
+    assert(first >= queries, s"first pass compiled $first classes")
+    val settled = compiles
+    pass()
+    assert(compiles == settled,
+      s"second pass recompiled ${compiles - settled} of $first classes")
   }
 
   /** Queries ALLOWED to return an empty relation at the correctness

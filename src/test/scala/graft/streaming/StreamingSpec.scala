@@ -209,6 +209,15 @@ class StreamingSpec extends SparkSpec {
   test("writeHourly: a micro-batch whose rows are all dropped leaves no " +
       "batch directory; the next non-empty batch still lands") {
     val c = new HourlyConsumer
+    // only a null station id: the first batch writes nothing, and the
+    // warehouse holds 0 rows rather than an unreadable empty directory
+    c.feedJson(Seq("""{"station_id":null,"station_name":"x",""" +
+      """"timestamp":"2024-06-01T10:20:00Z","temperature":7.0}"""))
+    assert(c.batchDirs.isEmpty)
+    def persisted(n: Long) = StreamPipeline.verifyRowPersistence(spark, c.warehouse, n)
+    assert(scala.util.Try(persisted(0)).isSuccess)
+    assert(persisted(0))
+    assert(!persisted(1))
     c.feed(Seq(obs("S1", "2024-06-01 10:00:00", 1.0),
       obs("S2", "2024-06-01 10:00:00", 2.0)))
     // only a replay and older readings: the monotonic dedup drops them all
@@ -216,9 +225,9 @@ class StreamingSpec extends SparkSpec {
       obs("S1", "2024-06-01 09:00:00", 9.0),
       obs("S2", "2024-06-01 08:00:00", 9.0)))
     c.feed(Seq(obs("S1", "2024-06-01 11:00:00", 3.0)))
-    assert(c.batchDirs == Set("batch_id=0", "batch_id=2"))
-    assert(spark.read.parquet(s"${c.warehouse}/batch_id=2").count() == 1)
-    assert(StreamPipeline.verifyRowPersistence(spark, c.warehouse, 3))
+    assert(c.batchDirs == Set("batch_id=1", "batch_id=3"))
+    assert(spark.read.parquet(s"${c.warehouse}/batch_id=3").count() == 1)
+    assert(persisted(3))
   }
 
   test("writeHourly computes each non-empty micro-batch in exactly one " +
