@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Session + table-loading helpers shared by the library, Verify and tests.
   *
@@ -34,8 +38,9 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // the driver-generated events table stores TIMESTAMP(NANOS) which the
-      // Parquet reader otherwise rejects; read as long and convert (see table()).
+      // the Parquet reader rejects TIMESTAMP(NANOS) columns; read them as
+      // long so table() can convert a nanos-written events file. The
+      // testdata itself stores TIMESTAMP(MICROS).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
@@ -65,18 +70,51 @@ object GraftSession {
 
   /** Load one of the driver-generated test tables from a scale-factor dir.
     *
-    * `events.ts` is TIMESTAMP(NANOS) in parquet; with nanosAsLong it arrives
-    * as a Long of epoch-nanos. Truncate to microseconds (integer `div`, the
-    * same truncation DuckDB's reader applies) and expose as a proper
-    * TimestampType so downstream operators and the DuckDB oracle agree.
+    * The testdata's `events.ts` is TIMESTAMP(MICROS) and loads as is. The
+    * Long branch guards an events file written with TIMESTAMP(NANOS): with
+    * nanosAsLong such a column arrives as a Long of epoch-nanos, so truncate
+    * it to microseconds (integer `div`, the same truncation DuckDB's reader
+    * applies) and expose it as a proper TimestampType so downstream
+    * operators and the DuckDB oracle agree.
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
+    if (name == "events" && df.schema("ts").dataType == LongType)
       // timestamp_ntz: DuckDB (the correctness oracle) reads parquet
       // timestamps as naive, and Spark 4 likewise infers NTZ for the other
       // testdata tables (inferTimestampNTZ) — keep one timestamp flavor.
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
     else df
+  }
+
+  /** The schema Spark inferred for a table file, with the length and
+    * modification time the file had then. */
+  private case class Inferred(len: Long, mtime: Long, schema: StructType)
+
+  /** One entry per qualified path, shared by every session of the JVM. */
+  private val inferred = new ConcurrentHashMap[Path, Inferred]()
+
+  /** `spark.read.parquet(path)` that infers the schema once per file.
+    *
+    * Without a schema Spark reads the footer in a one-task job on every
+    * open (~0.1 s for an sf0.01 table); with the stored one it runs none.
+    * A changed length or modification time re-infers and replaces the
+    * entry, from the same read the caller gets. A file rewritten in place
+    * with both unchanged keeps its old schema, as a Spark catalog table
+    * does until `REFRESH TABLE`.
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(p)
+    val status = fs.getFileStatus(key)
+    Option(inferred.get(key)) match {
+      case Some(e) if e.len == status.getLen && e.mtime == status.getModificationTime =>
+        spark.read.schema(e.schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        inferred.put(key, Inferred(status.getLen, status.getModificationTime, df.schema))
+        df
+    }
   }
 }

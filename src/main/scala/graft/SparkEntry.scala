@@ -15,7 +15,8 @@ import graft.operators.{Analytics, Clean, Curation, Dedup, Graphs, Joins, Multim
   * engine-independent results:
   *   - double measures are summed through DECIMAL and returned as double
   *     (bit-exact regardless of partitioning / engine);
-  *   - `events.ts` (nanos in parquet) is truncated to microseconds on load,
+  *   - `events.ts` is TIMESTAMP(MICROS) in the testdata and loads as is;
+  *     `GraftSession.table` truncates a nanos-written `ts` to microseconds,
   *     matching DuckDB's reader; oracles `CAST(ts AS TIMESTAMP)` likewise;
   *   - every query ends in a total sort or is an aggregation.
   */
