@@ -42,9 +42,18 @@ object Hashing {
   /** Driver-side mirror of [[h60]] for deterministic constants (e.g. LSH
     * hyperplane coefficients) — same md5-prefix scheme, same values.
     */
-  def h60Local(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
+  def h60Local(s: String): Long =
+    h60OfMd5(java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** [[h60]] of an md5 digest: its first 15 hex digits are the top 60 bits
+    * of the first 8 bytes read as a big-endian long. Shared by
+    * [[h60Local]] and the `shingle_h60` kernel.
+    */
+  def h60OfMd5(digest: Array[Byte]): Long = {
+    var v = 0L
+    var i = 0
+    while (i < 8) { v = (v << 8) | (digest(i) & 0xffL); i += 1 }
+    v >>> 4
   }
 }

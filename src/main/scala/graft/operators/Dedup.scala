@@ -138,18 +138,17 @@ object Dedup {
   def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     graft.Parallelism.fanOut(
         docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"),
-        explode(array_distinct(TextFns.shingles(col("__t"), n))).as("__s"))
-      .select(col("id"), Hashing.h60(col("__s")).as("sh"))
+      .select(col("id"), explode(shingleHashes(col("__t"), n)).as("sh"))
 
   /** Per-document distinct shingle-hash ARRAYS — the shuffle-free sibling
-    * of [[shingleSets]]: (id, shs array<long>, sz). Same 60-bit
-    * oracle-replayable hash per shingle, but kept as one array row per
-    * document instead of exploded postings, so set size is `size(shs)`
-    * (a projection, not a groupBy) and MinHash signatures become a pure
-    * projection too ([[minhashSignaturesArr]]). Documents with no
-    * shingles (fewer than `n` tokens, or null text) are absent, matching
-    * the exploded form where they contribute zero posting rows.
+    * of [[shingleSets]]: (id, shs array<long>, sz), one row per input row
+    * (ids are expected unique). Same 60-bit oracle-replayable hash per
+    * shingle, but kept as one array row per document instead of exploded
+    * postings, so set size is `size(shs)` and MinHash signatures become a
+    * pure projection too ([[minhashSignaturesArr]]). The whole relation is
+    * a projection: no aggregate, no exchange. Documents with no shingles
+    * (fewer than `n` tokens, or null text) are absent, matching the
+    * exploded form where they contribute zero posting rows.
     *
     * Scale trade-off vs postings: arrays keep each document's set on one
     * row — ideal while per-doc set sizes are bounded (web documents:
@@ -159,15 +158,16 @@ object Dedup {
     */
   def shingleArrays(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
-    // built by re-aggregating the EXPLODED postings, not by a
-    // transform(...) lambda over the shingle array: higher-order-function
-    // lambdas are interpreted (no whole-stage codegen), and the per-element
-    // md5 inside one measured 4x slower than the codegen'd explode form —
-    // one collect_list shuffle on the id buys codegen'd hashing and is
-    // still the ONLY aggregate exchange in the array pipeline
-    shingleSets(docs, idCol, textCol, n)
-      .groupBy("id")
-      .agg(collect_list(col("sh")).as("shs"), count(lit(1)).as("sz"))
+    graft.Parallelism.fanOut(
+        docs.select(col(idCol).as("id"), col(textCol).as("__t")))
+      .select(col("id"), shingleHashes(col("__t"), n).as("shs"))
+      .select(col("id"), col("shs"), size(col("shs")).cast("long").as("sz"))
+      .filter(col("sz") > 0)
+
+  /** The distinct shingle hashes of a text column, in first-occurrence
+    * order: the native `shingle_h60` kernel over [[TextFns.tokens]]. */
+  private def shingleHashes(text: Column, n: Int): Column =
+    call_function("shingle_h60", TextFns.tokens(text), lit(n))
 
   /** Exact n-gram Jaccard similarity join: all document pairs with
     * `|A∩B| / |A∪B| >= minJac`, computed by counting intersections
@@ -285,8 +285,7 @@ object Dedup {
     val sh = graft.CacheScope.register(
       graft.Parallelism.fanOut(docs.select(col(groupCol), col(textCol)))
         .select(col(groupCol).as("grp"),
-          explode(TextFns.shingles(col(textCol), n)).as("g"))
-        .select(col("grp"), Hashing.h60(col("g")).as("h"))
+          explode(shingleHashes(col(textCol), n)).as("h"))
         .distinct())
     val sizes = sh.groupBy("grp").agg(count(lit(1)).as("sz"))
     sh.as("a").join(sh.as("b"),
@@ -370,8 +369,8 @@ object Dedup {
 
   /** MinHash signatures: k INDEPENDENT hash families over the posting
     * keys via seeded xxHash64 (codegen'd, ~2ns/hash), one `min` aggregate
-    * per family — a single shuffle on the document id, k columns
-    * `s0..s{k-1}`.
+    * per family — a single shuffle on the document id — returned as
+    * (id, sig) with the k minima in one `array<bigint>`.
     *
     * Why not double-hashing (h1 + i*h2): without a modular wrap the i*h2
     * term dominates the argmin for larger i, collapsing the families onto
@@ -382,25 +381,24 @@ object Dedup {
     * checks the confirmed Jaccard, never the signatures.
     */
   def minhashSignatures(shingles: DataFrame, k: Int): DataFrame = {
-    val aggs = (0 until k).map { i =>
-      min(Hashing.hFast(col("sh"), i)).as(s"s$i")
-    }
-    shingles.groupBy("id").agg(aggs.head, aggs.tail: _*)
+    val aggs = (0 until k).map(i => min(Hashing.hFast(col("sh"), i)))
+    shingles.groupBy("id").agg(array(aggs: _*).as("sig"))
   }
 
   /** [[minhashSignatures]] over the array relation of [[shingleArrays]]:
     * the same k seeded-xxHash64 families and the same argmin per family
     * (bit-identical signatures — `xxhash64(seed, x)` over the same 60-bit
-    * keys), but as `array_min(transform(...))` in a single PROJECTION.
-    * The signature stage costs no shuffle at all; at 100 TB that removes
-    * a full-corpus exchange from the dedup critical path.
+    * keys), but as the native `minhash_sig` kernel in a single
+    * PROJECTION, returning (id, sig). The signature stage costs no shuffle
+    * at all; at 100 TB that removes a full-corpus exchange from the dedup
+    * critical path.
     */
-  def minhashSignaturesArr(docShingles: DataFrame, k: Int): DataFrame = {
-    val sigCols = (0 until k).map { i =>
-      array_min(transform(col("shs"), x => Hashing.hFast(x, i))).as(s"s$i")
-    }
-    docShingles.select(col("id") +: sigCols: _*)
-  }
+  def minhashSignaturesArr(docShingles: DataFrame, k: Int): DataFrame =
+    withSignature(docShingles, k).select("id", "sig")
+
+  /** `arr` plus its MinHash `sig` column, keeping every input column. */
+  private def withSignature(arr: DataFrame, k: Int): DataFrame =
+    arr.withColumn("sig", call_function("minhash_sig", col("shs"), lit(k)))
 
   /** LSH banding: signature → `bands` rows of (id, band, bucket) where the
     * bucket is a hash of `rowsPerBand` consecutive signature slots. Pairs
@@ -417,18 +415,13 @@ object Dedup {
       .distinct()
   }
 
-  /** Signature rows → (id, band, bucket) banding relation (`bands` rows
-    * per doc). Shared by the self-join candidate path, the persisted LSH
-    * index and the cross-corpus decontamination path. */
+  /** Signature rows (id, sig) → (id, band, bucket) banding relation
+    * (`bands` rows per doc, from the native `lsh_buckets` kernel). Shared
+    * by the self-join candidate path, the persisted LSH index and the
+    * cross-corpus decontamination path. */
   private[graft] def lshBands(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val r = k / bands
-    val bandCols = (0 until bands).map { b =>
-      val slots = (b * r until (b + 1) * r).map(i => col(s"s$i"))
-      struct(lit(b).as("band"), Hashing.hFast(concat_ws(",", slots: _*), b).as("bucket"))
-    }
-    sigs.select(col("id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    sigs.select(col("id"), inline(call_function("lsh_buckets", col("sig"), lit(bands))))
   }
 
   /** Full MinHash near-dup pipeline: shingle → sign → band → candidate →
@@ -439,14 +432,16 @@ object Dedup {
       n: Int, k: Int, bands: Int, minJac: Double,
       maxShingleDf: Int = Int.MaxValue): DataFrame = {
     if (maxShingleDf == Int.MaxValue) {
-      // Uncapped fast path: per-doc arrays make signatures and set sizes
-      // pure projections, and the confirm an array_intersect — the only
-      // shuffles left are the (band, bucket) candidate join itself. The
-      // signature relation is cached because the LSH self-join references
-      // it on BOTH sides; uncached, the k-family hashing would run twice.
-      val arr = graft.CacheScope.register(shingleArrays(docs, idCol, textCol, n))
-      val sigs = graft.CacheScope.register(minhashSignaturesArr(arr, k))
-      val cands = lshCandidatePairs(sigs, k, bands)
+      // Uncapped fast path: per-doc arrays make shingle sets, signatures
+      // and set sizes pure projections, and the confirm an
+      // array_intersect — the only shuffle left is the (band, bucket)
+      // candidate join itself. ONE relation (id, shs, sz, sig) is cached:
+      // the LSH self-join reads its signatures on BOTH sides and the
+      // confirm its arrays; uncached, shingling and the k-family hashing
+      // would run once per reference.
+      val arr = graft.CacheScope.register(
+        withSignature(shingleArrays(docs, idCol, textCol, n), k))
+      val cands = lshCandidatePairs(arr, k, bands)
       confirmJaccardArr(cands, arr, minJac)
         .select("id_a", "id_b", "jaccard")
     } else {
@@ -709,7 +704,9 @@ object Dedup {
     * contract as [[minhashNearDups]]).
     *
     * Scale shape: the corpus NEVER self-joins. Both sides shingle and
-    * sign (one shuffle each on doc id); the corpus banding relation
+    * sign in one pass over their union (uncapped: projections with no
+    * shuffle; df-capped: the postings' shuffles on the shingle and on the
+    * doc id); the corpus banding relation
     * (bands rows/doc) then joins the BENCHMARK banding relation, which is
     * tiny (eval suites ≪ corpus) and broadcast — so candidate generation
     * is a map-side probe over the corpus scan, and only candidate pairs
@@ -726,12 +723,12 @@ object Dedup {
     // and benchmark banding branches — without the cache each branch
     // would recompute the most expensive stage
     val (sigs, confirm) = if (maxShingleDf == Int.MaxValue) {
-      // Uncapped fast path — see [[minhashNearDups]]: signatures and set
-      // sizes are projections over the per-doc array relation, confirm is
-      // an array_intersect; no aggregate shuffle anywhere in the pipeline.
-      val arr = graft.CacheScope.register(shingleArrays(both, idCol, textCol, n))
-      (graft.CacheScope.register(minhashSignaturesArr(arr, k)),
-        (cands: DataFrame) => confirmJaccardArr(cands, arr, minJac))
+      // Uncapped fast path — see [[minhashNearDups]]: one cached
+      // (id, shs, sz, sig) projection feeds the banding and the
+      // array_intersect confirm; no aggregate shuffle in the pipeline.
+      val arr = graft.CacheScope.register(
+        withSignature(shingleArrays(both, idCol, textCol, n), k))
+      (arr, (cands: DataFrame) => confirmJaccardArr(cands, arr, minJac))
     } else {
       // one posting relation for both sides: shingle df (and so the cap
       // and the confirm) is computed over the SAME universe the oracle

@@ -2,9 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{ArrayDotProduct, ArrayIntersectCount, BloomMightContain, JaroWinkler, NfcNormalize, PqAssign}
+import graft.functions.{ArrayDotProduct, ArrayIntersectCount, BloomMightContain, JaroWinkler, LshBuckets, MinHashSig, NfcNormalize, PqAssign, ShingleH60}
 
 /** Session extensions registering graft's native expressions so they are
   * callable from SQL and `call_function` (`spark.sql.extensions` or
@@ -68,6 +68,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           intLit(children(2), "ksub"), intLit(children(3), "dsub"),
           children(4))
       }))
+    // the MinHash-LSH stages (shingle hashes -> signature -> band
+    // buckets); each checks its int parameter is a literal at analysis
+    Seq[(String, (Expression, Expression) => Expression, Class[_])](
+      ("shingle_h60", ShingleH60(_, _), classOf[ShingleH60]),
+      ("minhash_sig", MinHashSig(_, _), classOf[MinHashSig]),
+      ("lsh_buckets", LshBuckets(_, _), classOf[LshBuckets])
+    ).foreach { case (name, make, cls) =>
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == 2, s"$name takes exactly 2 arguments")
+          make(children.head, children(1))
+        }))
+    }
     ext.injectFunction((
       FunctionIdentifier("jaro_winkler"),
       new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),

@@ -329,7 +329,6 @@ class DedupSpec extends SparkSpec {
     val arr = graft.CacheScope.register(
       Dedup.shingleArrays(docs, "doc_id", "text", 3))
     val sigs = Dedup.minhashSignaturesArr(arr, k)
-      .select(col("id"), array((0 until k).map(i => col(s"s$i")): _*).as("sig"))
     // exact pairs at a low threshold so the estimator is tested across a
     // RANGE of true similarities, not only near-1 dups
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.4)
