@@ -486,7 +486,7 @@ object SparkEntry {
         FROM events GROUP BY 1 ORDER BY validity""")),
 
     // A3 — per-key partition summary (the queryable face of the per-station
-    // partitioned tables; materialization = Analytics.writePartitioned).
+    // partitioned tables; materialization = write.partitionBy(key)).
     "q17_partition_summary" -> Q(
       (s, dir) => Analytics.partitionSummary(t(s, dir, "events"), "user_id", "ts"),
       Some("""SELECT user_id, COUNT(*) AS n,
@@ -797,7 +797,7 @@ object SparkEntry {
       Some(knnTop5OracleSql)),
 
     // Embedding-cosine near-duplicate pairs (exact all-pairs baseline; the
-    // scale path is Similarity.nearDupLsh with hyperplane buckets).
+    // scale path is Similarity.nearDupLshBanded with hyperplane buckets).
     "q25_embedding_near_dup" -> Q(
       (s, dir) => Similarity.nearDupExact(t(s, dir, "embeddings"), "vec_id",
           "embedding", 0.45)
@@ -2841,8 +2841,8 @@ object SparkEntry {
         FROM h ORDER BY doc_id""")),
 
     // Cavnar–Trenkle char-ngram profile TRAINING: top-10 trigrams per
-    // language from the labeled corpus — the relation langIdCharNgram
-    // consumes, closing the train→predict loop. Ranking window runs over
+    // language from the labeled corpus — the relation a char-ngram
+    // language classifier scores against. Ranking window runs over
     // per-language aggregated gram counts (alphabet^n-bounded).
     "q112_char_profiles" -> Q(
       (s, dir) => TextOps.trainCharNgramProfiles(t(s, dir, "documents"),
@@ -4580,9 +4580,7 @@ object SparkEntry {
     // defining invariants as oracle-checkable booleans per component
     // pair (round-7 verdict #4): basis orthonormality and that the
     // projected coordinates diagonalize the covariance (cov = eigenvalue
-    // on the diagonal, ~0 off it). The projection itself (coordinates,
-    // eigenvalue ordering, determinism) stays pinned in SimilaritySpec
-    // via Similarity.pcaProject.
+    // on the diagonal, ~0 off it).
     "q143_pca_project" -> Q(
       (s, dir) => Similarity.pcaContractCheck(t(s, dir, "embeddings"),
         "vec_id", "embedding", 8),
@@ -5756,13 +5754,12 @@ object SparkEntry {
 
     // Z-ORDER curve profile: Morton-interleave (customer grid, order-day
     // grid) and aggregate zone-map stats per 64th of the curve — the
-    // digestible face of Warehouse.zorderBy's layout claim: every curve
-    // range carries a TIGHT min/max box on BOTH dimensions at once (a
-    // single-column sort leaves the other column's per-file range spanning
-    // the domain, pruning nothing). The oracle replays the identical
-    // 32-term shift/mask interleave, so the driver gate pins the bit math
-    // that zorderBy's file layout rides on. Map-side only + one 64-group
-    // aggregate at any scale.
+    // z-order layout claim: every curve range carries a TIGHT min/max box
+    // on BOTH dimensions at once (a single-column sort leaves the other
+    // column's per-file range spanning the domain, pruning nothing). The
+    // oracle replays the identical 32-term shift/mask interleave, so the
+    // driver gate pins Warehouse.morton's bit math. Map-side only + one
+    // 64-group aggregate at any scale.
     "q159_zorder_profile" -> Q(
       (s, dir) => {
         val orders = t(s, dir, "orders")

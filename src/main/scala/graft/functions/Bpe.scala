@@ -74,24 +74,6 @@ final case class BpeTokenizer(merges: Seq[(String, String)]) {
   def tokenCountExpr(text: Column): Column =
     length(encodeExpr(text)).cast("long")
 
-  /** Token strings as an array Column: split the symbol string per code
-    * point, decode merged symbols through a map literal (base chars pass
-    * through). All builtin expressions — stays in codegen.
-    */
-  def tokensExpr(text: Column): Column = {
-    val enc = encodeExpr(text)
-    // split("", "") yields [""], not [] — align with encode("") = Nil
-    val split1 = when(length(enc) === 0, array().cast("array<string>"))
-      .otherwise(split(enc, ""))
-    if (tokenOf.isEmpty) split1 // map() with 0 entries is map<null,null>;
-    // element_at on it fails analysis — with no merges every char is itself
-    else {
-      val decode = map(tokenOf.toSeq.sortBy(_._1)
-        .flatMap { case (s, tok) => Seq(lit(s), lit(tok)) }: _*)
-      transform(split1, c => coalesce(element_at(decode, c), c))
-    }
-  }
-
   /** DuckDB replay of [[tokenCountExpr]] over SQL expression `e` — the
     * same replace chain, the same length. DuckDB `length` counts code
     * points, matching Spark's `length` on the BMP symbols used here.

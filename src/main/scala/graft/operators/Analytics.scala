@@ -32,19 +32,6 @@ object Analytics {
         col(tsCol) <= lit(endTs).cast("timestamp"))
       .orderBy(col(tsCol), col(tieBreak))
 
-  /** Day bounds for the dashboard slice (F4): the reference computes the
-    * civil day in a FIXED UTC+2 offset (deliberately not Helsinki DST —
-    * `/root/reference/visualization/app.py:17-18, 32-36`) and converts to
-    * UTC instants. Returns [startInclusive, endInclusive] with
-    * microsecond-resolution end, driver-side `java.time` math.
-    */
-  def dayBoundsUtc(civilDate: java.time.LocalDate,
-      offsetHours: Int = 2): (java.sql.Timestamp, java.sql.Timestamp) = {
-    val startUtc = civilDate.atStartOfDay().minusHours(offsetHours)
-    val endUtc = startUtc.plusDays(1).minusNanos(1000)
-    (java.sql.Timestamp.valueOf(startUtc), java.sql.Timestamp.valueOf(endUtc))
-  }
-
   /** Hourly tumbling aggregate (W5/C3): the batch form of the reference's
     * floor-to-hour loading spec. Partial aggregation map-side; one shuffle
     * on the (coarse) hour key.
@@ -93,21 +80,14 @@ object Analytics {
 
   /** A3 — per-key partition summary (`transformations.py:107-115` builds
     * per-station sorted tables; at scale that materializes as
-    * `write.partitionBy(key)` — see [[writePartitioned]]). The queryable
-    * summary: per-key count + time extent.
+    * `write.partitionBy(key)`). The queryable summary: per-key count +
+    * time extent.
     */
   def partitionSummary(df: DataFrame, key: String, tsCol: String): DataFrame =
     df.groupBy(key)
       .agg(count(lit(1)).as("n"), min(col(tsCol)).as("min_ts"), max(col(tsCol)).as("max_ts"))
       .orderBy(key)
 
-  /** A3's materialization: hive-style partitioned, sorted-within-partition
-    * parquet — the scalable rendering of "dict of per-station sorted frames".
-    */
-  def writePartitioned(df: DataFrame, key: String, tsCol: String, path: String): Unit =
-    df.repartition(col(key))
-      .sortWithinPartitions(key, tsCol)
-      .write.mode("overwrite").partitionBy(key).parquet(path)
 
   /** F6/D3 batch form — per-key watermark freshness filter
     * (`/root/reference/src/data_processing/kafka_stream.py:269-273`): given a

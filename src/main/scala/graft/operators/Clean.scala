@@ -32,13 +32,6 @@ object Clean {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** C2 — timestamp normalization to UTC
-    * (`transformations.py:134`, `fmi_client.py:168`): ISO-8601 strings with
-    * `Z`/offsets parse natively under a UTC session time zone; tz-naive
-    * strings default to UTC (`kafka_stream.py:260-267`).
-    */
-  def normalizedTs(c: Column): Column = c.try_cast(TimestampType)
-
   /** C3 — hour flooring (`README.md:37,73`;
     * `tests/test_transformations.py:89-106` — the spec the reference's code
     * drifted from; SURVEY.md §5 adopts the test semantics).

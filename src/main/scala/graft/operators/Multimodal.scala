@@ -1,31 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal (image/audio/video) column plumbing.
   *
   * Media payloads are opaque `binary` columns with typed metadata alongside
-  * — the schema, partitioning and batch shape are real; only the actual
-  * codec call is stubbed (the decode libraries are not in this container).
-  * The stub is deterministic (hash-derived dimensions) so every downstream
-  * stage is testable end-to-end.
+  * — the schema, partitioning and batch shape are real; the byte→pixel
+  * codec is stubbed as position sampling over the payload bytes (no decode
+  * library is linked), deterministic so every downstream stage is
+  * testable end-to-end.
   *
   * Scale notes: payloads dominate row size, so (a) never shuffle the binary
   * column — extract features first, then join features back by id if
-  * needed; (b) decode via `mapPartitions` so per-partition codec context
-  * (native decoder handles, GPU sessions) is initialized once per task, not
-  * per row; (c) `spark.sql.files.maxPartitionBytes` governs scan
+  * needed; (b) `spark.sql.files.maxPartitionBytes` governs scan
   * parallelism since rows are huge.
   */
 object Multimodal {
-
-  /** A media row: opaque payload + metadata. */
-  case class MediaRecord(doc_id: Long, mime: String, payload: Array[Byte])
-
-  /** Decoded/feature-extracted output of the stub codec. */
-  case class DecodedMedia(doc_id: Long, mime: String, n_bytes: Int,
-      width: Int, height: Int, n_frames: Int, feature_checksum: Long)
 
   /** Manufacture a binary media column from the documents table (the test
     * stand-in for real image bytes: UTF-8 of the text). Pure projection.
@@ -170,96 +161,5 @@ object Multimodal {
           lit(0), (acc, x) => acc + x))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
-  }
-
-  // === Stubbed codec ========================================================
-  // A real deployment replaces `decodeOne` with the native library call
-  // (e.g. javax.imageio / ffmpeg bindings). STUB: dimensions are derived
-  // deterministically from the payload so the pipeline is testable.
-
-  private def decodeOne(rec: MediaRecord): DecodedMedia = {
-    // --- real decode would happen here: ImageIO.read(new ByteArrayInputStream(rec.payload)) ---
-    val n = rec.payload.length
-    var checksum = 1125899906842597L
-    var i = 0
-    while (i < n) { checksum = 31 * checksum + rec.payload(i); i += 1 }
-    DecodedMedia(rec.doc_id, rec.mime, n,
-      width = (math.abs(checksum) % 1920).toInt + 1,
-      height = (math.abs(checksum) / 1920 % 1080).toInt + 1,
-      n_frames = n / 100 + 1,
-      feature_checksum = checksum)
-  }
-
-  /** Decode / feature-extract via `mapPartitions`: one codec context per
-    * partition, streaming through rows (never materializing the partition).
-    */
-  def decode(media: DataFrame)(implicit spark: SparkSession): Dataset[DecodedMedia] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      // per-partition codec init would go here (native handles, GPU session)
-      it.map(decodeOne)
-    }
-  }
-
-  /** Frame sampling stub for video-like payloads: emit every `stride`-th
-    * "frame" (payload chunk) as its own row — the explode-shaped op a video
-    * pipeline needs. Chunking is deterministic; flatMap keeps it streaming.
-    */
-  def sampleFrames(media: DataFrame, frameBytes: Int, stride: Int)(
-      implicit spark: SparkSession): Dataset[(Long, Int, Array[Byte])] = {
-    import spark.implicits._
-    media.as[MediaRecord].flatMap { rec =>
-      rec.payload.grouped(frameBytes).zipWithIndex
-        .filter(_._2 % stride == 0)
-        .map { case (chunk, idx) => (rec.doc_id, idx, chunk) }
-    }
-  }
-
-  /** A resized fixed-grid representation: `pixels` is `w*h` row-major
-    * cells, each an exact integer mean of its source span. */
-  case class ResizedMedia(doc_id: Long, mime: String, w: Int, h: Int,
-      pixels: Array[Int])
-
-  /** RESIZE to a fixed (w × h) grid by average pooling — the normalization
-    * every vision pipeline runs before batching (models take fixed
-    * shapes; raw media doesn't). The pooling itself is the real
-    * algorithm — equal-area source spans, exact integer means, identical
-    * output for identical payloads regardless of partitioning; only the
-    * byte→luma interpretation is the container's codec stub (a real
-    * deployment pools decoded pixel rows instead of the byte stream —
-    * one line in `cell`).
-    *
-    * Scale shape: `mapPartitions` streaming (one codec/buffer context per
-    * task), output rows are small fixed-size arrays — this is the stage
-    * that SHRINKS media rows so later stages (batch assembly, embedding)
-    * can shuffle them safely; never shuffle the raw payload (see object
-    * scaladoc).
-    */
-  def resizePooled(media: DataFrame, w: Int, h: Int)(
-      implicit spark: SparkSession): Dataset[ResizedMedia] = {
-    require(w >= 1 && h >= 1, s"bad target grid ${w}x$h")
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { rec =>
-        val n = rec.payload.length
-        val cells = w * h
-        val pixels = new Array[Int](cells)
-        if (n > 0) {
-          var j = 0
-          while (j < cells) {
-            // equal-area span [j*n/cells, (j+1)*n/cells) — covers every
-            // byte exactly once across cells, never empty when n >= cells
-            val lo = (j.toLong * n / cells).toInt
-            val hi = (((j + 1).toLong * n / cells).toInt).max(lo + 1).min(n)
-            var s = 0L
-            var i = lo
-            while (i < hi) { s += rec.payload(i) & 0xFF; i += 1 }
-            pixels(j) = (s / (hi - lo)).toInt
-            j += 1
-          }
-        }
-        ResizedMedia(rec.doc_id, rec.mime, w, h, pixels)
-      }
-    }
   }
 }

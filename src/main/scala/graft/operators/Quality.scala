@@ -94,12 +94,6 @@ object Quality {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** A7 — distinct count (`visualization/app.py:86`) at scale: HLL
-    * sketch, one pass, no shuffle of distinct values.
-    */
-  def approxDistinctCount(df: DataFrame, c: String, rsd: Double = 0.01): DataFrame =
-    df.agg(approx_count_distinct(col(c), rsd).as("n_distinct_approx"))
-
   /** Robust outlier stats per group: median and MAD (median absolute
     * deviation) of `valCol`, plus how many rows sit more than
     * `k * MAD` from the median — the robust complement of [[zscoreOutliers]]

@@ -48,14 +48,6 @@ object Sampling {
     df.withColumn("split", assign)
   }
 
-  /** Deterministic p-percent sample: rows whose bucket falls below
-    * `fraction * 10000`. Stable across runs/partitionings (same rows every
-    * time), unlike `df.sample`.
-    */
-  def hashSample(df: DataFrame, idCol: String, salt: String,
-      fraction: Double): DataFrame =
-    df.filter(bucket(col(idCol), salt) < math.round(fraction * 10000).toInt)
-
   /** Deterministic mixture resampling: per-group keep rates, the "hit the
     * target domain mixture" op (downsample over-represented sources,
     * keep the rest). Rates are fractions in [0, 1] by group value;
@@ -79,7 +71,7 @@ object Sampling {
 
   /** Deterministic stratified sample: up to `perStratum` rows from every
     * stratum, chosen by hash rank (h60 of salt:id, id tiebreak) — the
-    * "N examples per language/source" pipeline op. Like [[hashSample]],
+    * "N examples per language/source" pipeline op. Like [[mixtureSample]],
     * membership is a pure row function given the stratum's population,
     * so reruns and engines agree.
     *

@@ -22,28 +22,14 @@ object TextOps {
     "fr" -> Seq("query", "value", "small", "vector"),
     "zh" -> Seq("merge", "batch", "line", "slow"))
 
-  /** Per-language lexicon hit count over whitespace tokens. */
-  def lexiconScore(textCol: Column, lexicon: Seq[String]): Column =
-    size(filter(TextFns.tokens(textCol), t => t.isInCollection(lexicon)))
-
-  /** Language-ID prediction: argmax of lexicon scores, ties broken by
-    * lexicon declaration order (alphabetical). A CASE chain, not a struct
-    * sort, so the tie-break is explicit and engine-independent.
-    */
-  def langIdPredict(textCol: Column): Column = {
-    val scores = langLexicons.map { case (lang, lex) => lang -> lexiconScore(textCol, lex) }
-    val all = scores.map(_._2)
-    scores.foldRight(lit("und")) { case ((lang, s), rest) =>
-      when(s >= greatest(all: _*) && s > 0, lang).otherwise(rest)
-    }
-  }
-
-  /** DataFrame-level language ID: tokenizes ONCE and materializes one
-    * score column per language before the argmax CASE. The pure-Column
-    * form ([[langIdPredict]]) embeds every score subtree ~7x inside the
-    * CASE/greatest chain — interpreted higher-order filters get no
-    * common-subexpression elimination, so that's ~30 tokenizations per
-    * row; this form keeps one. Same output.
+  /** Language ID: argmax of per-language lexicon hit counts over
+    * whitespace tokens, ties broken by lexicon declaration order
+    * (alphabetical), zero hits → 'und'. A CASE chain, not a struct sort,
+    * so the tie-break is explicit and engine-independent. Tokenizes ONCE
+    * and materializes one score column per language before the CASE: a
+    * pure-Column form would embed every score subtree ~7x inside the
+    * CASE/greatest chain, and interpreted higher-order filters get no
+    * common-subexpression elimination (~30 tokenizations per row).
     */
   def langId(df: DataFrame, textCol: String, out: String): DataFrame = {
     val toks = graft.Parallelism.fanOut(df)
@@ -116,11 +102,9 @@ object TextOps {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** TRAINING pass for [[langIdCharNgram]]: the top-K character n-grams
-    * per language from a labeled corpus — the Cavnar–Trenkle n-gram
-    * profile. Deterministic rank (count desc, gram asc); the output
-    * relation IS the `profiles` argument the predictor consumes, closing
-    * the train→predict loop without any external model artifact.
+  /** The top-K character n-grams per language from a labeled corpus —
+    * the Cavnar–Trenkle n-gram profile a char-n-gram language classifier
+    * scores documents against. Deterministic rank (count desc, gram asc).
     *
     * Scale shape: one shuffle on (lang, gram) with map-side combine; the
     * ranking window partitions by language over the AGGREGATED gram
@@ -140,24 +124,6 @@ object TextOps {
       .partitionBy(col(langCol)).orderBy(col("cnt").desc, col("gram"))
     counts.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= topK)
-  }
-
-  /** Char-n-gram profile language ID: score(lang) = fraction of the
-    * document's char trigrams found in that language's profile set;
-    * argmax with declaration-order tie-break. The lexicon variant
-    * ([[langIdPredict]]) scores whole tokens; this one works on unseen
-    * words — the standard n-gram heuristic.
-    */
-  def langIdCharNgram(textCol: Column,
-      profiles: Seq[(String, Seq[String])], n: Int = 3): Column = {
-    val grams = charNgrams(textCol, n)
-    val scores = profiles.map { case (lang, prof) =>
-      lang -> size(filter(grams, g => g.isInCollection(prof)))
-    }
-    val all = scores.map(_._2)
-    scores.foldRight(lit("und")) { case ((lang, s), rest) =>
-      when(s >= greatest(all: _*) && s > 0, lang).otherwise(rest)
-    }
   }
 
   /** Quality features per document: char/token counts, mean token length,

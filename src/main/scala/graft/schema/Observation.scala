@@ -47,9 +47,6 @@ object Observation {
     * `/root/reference/src/data_processing/transformations.py:189-198`). */
   val requiredFields: Seq[String] = Seq("station_id", "timestamp")
 
-  /** Dedup key (D1/D2, `transformations.py:76-84,233-237`). */
-  val dedupKeys: Seq[String] = Seq("station_id", "timestamp")
-
   /** Raw wire schema: what a Kafka JSON message carries before coercion
     * (everything a string-or-number; `kafka_stream.py:60,299`). Used with
     * `from_json` on the streaming path.

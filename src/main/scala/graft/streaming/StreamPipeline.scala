@@ -140,28 +140,6 @@ object StreamPipeline {
       .select(col("w.start").as("hour"), col("station_id"), col("n"),
         col("avg_temperature"), col("max_wind_speed"))
 
-  /** Watermarked stream-stream INNER interval join: each left row is
-    * enriched by right rows with the same key whose timestamp falls in
-    * `[leftTs - lookback, leftTs]` (e.g. views joined to the user's
-    * purchases within the trailing hour). Both sides carry event-time
-    * watermarks and the join condition bounds the time range in BOTH
-    * directions, so Spark can evict join state once the watermark passes
-    * — state is O(lookback + lateness) per key, never unbounded; without
-    * the range bound a stream-stream join must keep every row forever.
-    * Works identically on batch DataFrames (watermarks are no-ops there).
-    */
-  def intervalJoin(left: DataFrame, right: DataFrame, key: String,
-      leftTs: String, rightTs: String, lookback: String,
-      lateness: String = "1 hour"): DataFrame =
-    left.withWatermark(leftTs, lateness).as("l")
-      .join(right.withWatermark(rightTs, lateness).as("r"),
-        // every reference side-qualified: both streams naming their
-        // event-time column the same way (ts/ts) must not be ambiguous
-        col(s"l.$key") === col(s"r.$key") &&
-          col(s"r.$rightTs") >= col(s"l.$leftTs") - expr(s"INTERVAL $lookback") &&
-          col(s"r.$rightTs") <= col(s"l.$leftTs"))
-      .drop(col(s"r.$key"))
-
   /** A8 — post-load verification (`kafka_stream.py:161-193`): re-read the
     * sink and check the row count reached the expected floor. A warehouse
     * with no `batch_id=` directory (every batch was empty) holds 0 rows;

@@ -1,10 +1,7 @@
 package graft
 
 import java.time.LocalDateTime
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -15,32 +12,6 @@ class TableSchemaSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private val tables = Seq("customer", "documents", "embeddings", "events", "lineitem",
     "nation", "orders", "part", "region", "supplier")
-
-  /** Spark jobs that `body` starts on this thread. The listener bus is
-    * asynchronous; a sentinel job started after `body` is delivered after
-    * every job `body` started. */
-  private def jobsStarted[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = "graft.test.jobs"
-    val started = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
-          case Some("body") => started.incrementAndGet()
-          case Some("sentinel") => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      val out = try body finally sc.setLocalProperty(tag, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
-      assert(flushed.await(60, TimeUnit.SECONDS))
-      (out, started.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a second open of an unchanged table file starts no Spark job and " +
       "returns the schema Spark infers") {

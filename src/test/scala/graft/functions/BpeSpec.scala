@@ -74,36 +74,10 @@ class BpeSpec extends SparkSpec {
     val viaDriver = docs.collect()
       .map(r => r.getLong(0) -> t.encode(r.getString(1)).size.toLong).toMap
     assert(viaColumn == viaDriver)
-    // the token-ARRAY column form decodes to the same sequence
-    val arrColumn = docs
-      .select(col("doc_id"), t.tokensExpr(col("text")).as("toks"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap
-    val arrDriver = docs.collect()
-      .map(r => r.getLong(0) -> t.encode(r.getString(1)).toList).toMap
-    assert(arrColumn == arrDriver)
     // sub-word property: fewer tokens than characters, more than ws words
     val sample = docs.collect().head.getString(1)
     assert(t.encode(sample).size < sample.length)
     assert(t.encode(sample).mkString == sample) // lossless round-trip
-  }
-
-  test("tokensExpr: empty input yields an empty array, like encode") {
-    import spark.implicits._
-    val t = BpeTokenizer(Seq(("a", "b")))
-    val r = Seq(("", 0)).toDF("s", "i")
-      .select(t.tokensExpr(col("s")).as("toks")).collect()(0)
-    assert(r.getSeq[String](0).isEmpty)
-  }
-
-  test("tokensExpr with an EMPTY merge table: chars pass through " +
-      "(no map() analysis failure)") {
-    import spark.implicits._
-    val t = BpeTokenizer(Nil)
-    val r = Seq(("abc", 0), ("", 1)).toDF("s", "i").orderBy("i")
-      .select(t.tokensExpr(col("s")).as("toks")).collect()
-    assert(r(0).getSeq[String](0) == Seq("a", "b", "c"))
-    assert(r(1).getSeq[String](0).isEmpty)
-    assert(t.encode("abc") == Seq("a", "b", "c")) // driver form agrees
   }
 
   test("round-trip: concatenated decoded tokens reproduce the input") {

@@ -3,6 +3,7 @@ package graft.operators
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 import graft.SparkSpec
 import graft.schema.Observation
@@ -38,7 +39,9 @@ class CleanSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq("2024-06-01T10:00:00Z", "2024-06-01T10:00:00",
       "2024-06-01T13:00:00+03:00").toDF("ts")
-    val out = df.select(Clean.normalizedTs(col("ts")).as("t")).collect()
+    // C2 runs inside C1: coercion try-casts the wire string to TIMESTAMP
+    val out = Clean.coerceToSchema(df.withColumnRenamed("ts", "t"),
+      StructType(Seq(StructField("t", TimestampType)))).collect()
     assert(out.forall(_.getAs[Timestamp]("t") ==
       Timestamp.valueOf("2024-06-01 10:00:00")))
   }
@@ -106,13 +109,6 @@ class CleanSpec extends SparkSpec {
     ).toDF("station_id", "timestamp")
     val (good, bad) = Clean.validInvalidSplit(df, Observation.schema)
     assert(good.count() == 1 && bad.count() == 1)
-  }
-
-  test("dayBoundsUtc: fixed UTC+2 civil day maps to UTC instants " +
-      "(visualization/app.py:32-36)") {
-    val (s, e) = Analytics.dayBoundsUtc(java.time.LocalDate.of(2024, 6, 1))
-    assert(s == Timestamp.valueOf("2024-05-31 22:00:00"))
-    assert(e == Timestamp.valueOf("2024-06-01 21:59:59.999999"))
   }
 
   test("whitelist keeps only listed stations (test_build_long_term_tables)") {

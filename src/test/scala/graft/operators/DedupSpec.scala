@@ -388,4 +388,28 @@ class DedupSpec extends SparkSpec {
     assert(empty.getAs[Long]("n_leaked") == 0L)
     assert(empty.getAs[Long]("leaked_micro") == 0L)
   }
+
+  /** Spark jobs one `minhashNearDups` call starts over the sf0.001
+    * exact-dedup survivors (cached, as the curation job caches them),
+    * result collected. Fewer jobs than pinned passes with a note to
+    * re-pin; more fails. */
+  private val minhashJobsPin = 12
+
+  test("minhashNearDups over the sf0.001 exact-dedup survivors starts no " +
+      "more Spark jobs than pinned, the same number on every run") {
+    val docs = graft.GraftSession.table(spark, "/root/testdata/sf0.001", "documents")
+    def jobs(): Int = jobsStarted {
+      try Dedup.minhashNearDups(
+          graft.CacheScope.register(Dedup.exactByFingerprint(docs, "doc_id",
+            TextFns.prefixFingerprint(col("text"), 80))),
+          "doc_id", "text", 3, 64, 16, 0.8).collect()
+      finally graft.CacheScope.releaseAll()
+    }._2
+    val counts = Seq.fill(3)(jobs())
+    assert(counts.distinct.size == 1, s"job count differs between runs: $counts")
+    assert(counts.head <= minhashJobsPin,
+      s"minhashNearDups jobs $minhashJobsPin -> ${counts.head}")
+    if (counts.head < minhashJobsPin)
+      info(s"fewer jobs (consider re-pinning): $minhashJobsPin -> ${counts.head}")
+  }
 }

@@ -134,21 +134,6 @@ class QualitySpec extends SparkSpec {
     assert(out(0).getAs[Long]("n") == 3L)
   }
 
-  test("approxDistinctCount is within the HLL error bound of the exact " +
-      "count (the q46 no-oracle gap, test-enforced: |approx-exact| <= " +
-      "2*rsd*exact)") {
-    import spark.implicits._
-    // 10k rows over 3123 distinct keys — large enough that the sketch
-    // actually estimates (no small-cardinality exact path)
-    val df = (0 until 10000).map(i => s"user-${i % 3123}").toDF("user_id")
-    val exact = 3123.0
-    val rsd = 0.02
-    val approx = Quality.approxDistinctCount(df, "user_id", rsd)
-      .collect()(0).getLong(0).toDouble
-    assert(math.abs(approx - exact) <= 2 * rsd * exact,
-      s"approx=$approx exact=$exact rsd=$rsd")
-  }
-
   test("trailingCount bounds the window to days back from the max timestamp") {
     import spark.implicits._
     val df = Seq("2024-01-01 00:00:00", "2024-06-01 00:00:00",

@@ -76,17 +76,6 @@ class SamplingSpec extends SparkSpec {
     assert(seqByDoc.zip(seqByDoc.tail).forall { case (a, b) => a <= b })
   }
 
-  test("hashSample: deterministic subset of the requested size, stable " +
-      "across calls, and nested (10% within 20%)") {
-    val s10 = Sampling.hashSample(ids, "id", "s", 0.10)
-    val s20 = Sampling.hashSample(ids, "id", "s", 0.20)
-    val n10 = s10.count()
-    assert(math.abs(n10 - 1000L) < 150)
-    assert(Sampling.hashSample(ids, "id", "s", 0.10).count() == n10)
-    // bucket < 1000 implies bucket < 2000: the 10% sample nests in the 20%
-    assert(s10.join(s20, Seq("id"), "left_anti").count() == 0)
-  }
-
   test("mixtureSample: per-group rates hit their targets, rate-1 groups " +
       "survive intact, and membership is stable across partitionings") {
     import spark.implicits._

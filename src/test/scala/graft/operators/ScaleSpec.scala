@@ -111,22 +111,6 @@ class ScaleSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("writePartitioned produces key-partitioned layout that prunes on read") {
-    import spark.implicits._
-    val df = Seq(("S1", "2024-01-01 00:00:00", 1.0), ("S2", "2024-01-01 00:00:00", 2.0),
-      ("S3", "2024-01-01 00:00:00", 3.0))
-      .toDF("station_id", "ts", "v")
-      .withColumn("ts", col("ts").cast("timestamp"))
-    val dir = tempDir("graft-part")
-    Analytics.writePartitioned(df, "station_id", "ts", dir)
-    // layout: one directory per station
-    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("station_id=")) == 3)
-    val read = spark.read.parquet(dir).filter(col("station_id") === "S2")
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("station_id"))
-    assert(read.collect().map(_.getAs[Double]("v")).toSeq == Seq(2.0))
-  }
-
   test("shingle-df cap keeps dedup sub-quadratic under planted boilerplate skew") {
     import spark.implicits._
     // 30% of docs share one boilerplate sentence (the classic web-corpus

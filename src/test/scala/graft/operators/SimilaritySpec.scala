@@ -16,17 +16,6 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
   }
 
-  test("cosineExact: parallel → 1, orthogonal → 0, 45° → √2/2") {
-    val v = vecs
-    val out = v.as("a").join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("ia"), col("b.vec_id").as("ib"),
-        Similarity.cosineExact(col("a.embedding"), col("b.embedding")).as("cos"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(out((0L, 2L)) == 1.0)
-    assert(out((0L, 1L)) == 0.0)
-    assert(math.abs(out((0L, 3L)) - math.sqrt(2) / 2) < 1e-9)
-  }
-
   test("knnExact ranks by cosine desc with id tie-break and excludes self") {
     val out = Similarity.knnExact(vecs, vecs.filter(col("vec_id") === 0),
       "vec_id", "embedding", 3).collect()
@@ -70,12 +59,6 @@ class SimilaritySpec extends SparkSpec {
         "vec_id", "embedding", "label", 2)
       .orderBy(col("cos").desc).collect()
     assert(out.map(_.getAs[Long]("id")).toSeq == Seq(2L, 3L))
-  }
-
-  test("knnLsh finds the parallel vector (same half-space bucket)") {
-    val out = Similarity.knnLsh(vecs, vecs.filter(col("vec_id") === 0),
-      "vec_id", "embedding", 3, nPlanes = 2, dim = 3).collect()
-    assert(out.map(_.getAs[Long]("id")).contains(2L))
   }
 
   test("array_dot native expression: SQL surface and value") {
@@ -314,14 +297,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out(3L)._2)                 // far from every centroid
   }
 
-  test("nearDupLsh is a subset of nearDupExact") {
-    val exact = Similarity.nearDupExact(vecs, "vec_id", "embedding", 0.5)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    val lsh = Similarity.nearDupLsh(vecs, "vec_id", "embedding", 0.5, 2, 3)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(lsh.subsetOf(exact))
-  }
-
   test("lloydStep: members join their nearest seed, means are exact, " +
       "and a step from planted clusters recovers the cluster means") {
     import spark.implicits._
@@ -410,46 +385,6 @@ class SimilaritySpec extends SparkSpec {
     assert(math.abs(out(("a", "b")) - math.sqrt(17.0)) < 1e-9)
   }
 
-  test("pcaProject: orthonormal components, descending eigenvalues, " +
-      "decorrelated coordinates with variance = eigenvalue") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    // anisotropic cloud: dim 0 has 10x the spread of dim 1, dim 2 is a
-    // mix -> a clearly ordered spectrum in a rotated basis
-    val rows = (1L to 200L).map { i =>
-      val a = rnd.nextGaussian() * 10
-      val b = rnd.nextGaussian()
-      (i, Seq((a + b).toFloat, b.toFloat, (a - b).toFloat))
-    }
-    val df = rows.toDF("vec_id", "embedding")
-    val proj = Similarity.pcaProject(df, "vec_id", "embedding", 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1),
-        r.getAs[Double]("eigenvalue"), r.getAs[Double]("coord")))
-    val eigs = proj.map(p => p._2 -> p._3).distinct.sortBy(_._1).map(_._2).toSeq
-    assert(eigs.size == 3)
-    assert(eigs.zip(eigs.tail).forall { case (a, b) => a >= b })
-    // per-component sample variance equals its eigenvalue; distinct
-    // components are decorrelated (the projection diagonalizes cov)
-    val byComp = proj.groupBy(_._2).view.mapValues(_.sortBy(_._1).map(_._4)).toMap
-    val n = byComp(0).size
-    def mean(xs: Seq[Double]) = xs.sum / xs.size
-    for (c <- 0 until 3) {
-      val xs = byComp(c); val m = mean(xs)
-      val svar = xs.map(x => (x - m) * (x - m)).sum / (n - 1)
-      assert(math.abs(svar - eigs(c)) < 1e-6 * math.max(1.0, eigs(c)),
-        s"component $c variance $svar != eigenvalue ${eigs(c)}")
-    }
-    val m0 = mean(byComp(0)); val m1 = mean(byComp(1))
-    val cross = byComp(0).zip(byComp(1))
-      .map { case (x, y) => (x - m0) * (y - m1) }.sum / (n - 1)
-    assert(math.abs(cross) < 1e-6 * eigs(0), s"components correlate: $cross")
-    // determinism: a second run reproduces coordinates bit-for-bit
-    val again = Similarity.pcaProject(df, "vec_id", "embedding", 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getAs[Double]("coord")))
-    assert(again.sortBy(t => (t._1, t._2)).map(_._3).toSeq ==
-      proj.sortBy(t => (t._1, t._2)).map(t => t._4).toSeq)
-  }
-
   test("pcaModel cache keys on the vector column: same frame, different " +
       "vecCol trains a fresh model (ADVICE r6 regression)") {
     import spark.implicits._
@@ -460,23 +395,17 @@ class SimilaritySpec extends SparkSpec {
       (i, Seq((a * 10).toFloat, a.toFloat), Seq(a.toFloat, (a * 10).toFloat))
     }
     val df = rows.toDF("vec_id", "v1", "v2")
-    def topVar(vecCol: String): Double =
-      Similarity.pcaProject(df, "vec_id", vecCol, 1)
-        .select("eigenvalue").distinct().as[Double].collect().head
-    val e1 = topVar("v1")
-    val e2 = topVar("v2")  // a stale v1-keyed cache hit would return e1's
-                           // model trained on the wrong column
-    assert(math.abs(e1 - e2) < 1e-6 * e1,
-      s"same cloud rotated: eigenvalues should match ($e1 vs $e2)")
-    // distinguish the models themselves: coordinates of doc 1 must come
-    // from projecting DIFFERENT columns — pin via per-model means
-    val c1 = Similarity.pcaProject(df, "vec_id", "v1", 1)
-      .filter($"vec_id" === 1L).select("coord").as[Double].collect().head
-    val c2 = Similarity.pcaProject(df, "vec_id", "v2", 1)
-      .filter($"vec_id" === 1L).select("coord").as[Double].collect().head
-    // both clouds are the same line rotated, so |coord| matches; the real
-    // assertion is that neither call crashed on a stale-model dim mismatch
-    assert(math.abs(math.abs(c1) - math.abs(c2)) < 1e-6 * math.max(1.0, math.abs(c1)))
+    // the contract check projects vecCol onto the cached basis: a stale
+    // v1-keyed hit on v2 would project v2 onto v1's top component, whose
+    // variance (~4 var(a)) misses v1's eigenvalue (~101 var(a)), so
+    // cov_ok would fail
+    def contractHolds(vecCol: String): Boolean = {
+      val out = Similarity.pcaContractCheck(df, "vec_id", vecCol, 1).collect()
+      out.length == 1 &&
+        out.forall(r => r.getAs[Boolean]("ortho_ok") && r.getAs[Boolean]("cov_ok"))
+    }
+    assert(contractHolds("v1"))
+    assert(contractHolds("v2"))
   }
 
   test("sourceSilhouette: perfectly separated singletons score exactly 1; " +

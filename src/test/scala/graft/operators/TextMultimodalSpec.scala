@@ -26,18 +26,6 @@ class TextMultimodalSpec extends SparkSpec {
     assert(out("s2") == ((1L, 2L, 2L, 206835.0 - 2030.0 - 84600.0)))
   }
 
-  test("langIdPredict scores lexicon hits with deterministic tie-break") {
-    import spark.implicits._
-    val df = Seq(
-      (0L, "the key row appears in the data"),     // en lexicon hits
-      (1L, "agg window join group agg window"),    // de lexicon hits
-      (2L, "xyzzy plugh nothing matches here")     // no hits → und
-    ).toDF("doc_id", "text")
-    val out = df.select(col("doc_id"), TextOps.langIdPredict(col("text")).as("p"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(0L) == "en" && out(1L) == "de" && out(2L) == "und")
-  }
-
   test("codeSwitchAudit: a half-English/half-German doc flags mixed; " +
       "uniform and undecidable docs do not") {
     import spark.implicits._
@@ -63,21 +51,16 @@ class TextMultimodalSpec extends SparkSpec {
     assert(out(0L).getAs[Long]("n_tokens") == 6L)
   }
 
-  test("charNgrams and char-profile language ID") {
+  test("charNgrams: overlapping n-grams of the normalized text, none " +
+      "for text shorter than n") {
     import spark.implicits._
-    val df = Seq((0L, "aber die und"), (1L, "the and with"), (2L, "zz"))
-      .toDF("doc_id", "text")
-    val grams = df.filter(col("doc_id") === 0)
+    val df = Seq((0L, "aber die und"), (1L, "zz")).toDF("doc_id", "text")
+    val grams = df.orderBy("doc_id")
       .select(TextOps.charNgrams(col("text"), 3).as("g"))
-      .collect()(0).getSeq[String](0)
-    assert(grams.length == 10 && grams.head == "abe" && grams.contains("r d"))
-    val profiles = Seq(
-      "de" -> Seq("abe", "ber", "die", "und", "er "),
-      "en" -> Seq("the", "he ", "and", "wit", "ith"))
-    val out = df.select(col("doc_id"),
-        TextOps.langIdCharNgram(col("text"), profiles).as("p"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out == Map(0L -> "de", 1L -> "en", 2L -> "und"))
+      .collect().map(_.getSeq[String](0))
+    assert(grams(0).length == 10 && grams(0).head == "abe" &&
+      grams(0).contains("r d"))
+    assert(grams(1).isEmpty)
   }
 
   test("qualityFeatures computes exact counts and micro-unit ratios") {
@@ -158,49 +141,6 @@ class TextMultimodalSpec extends SparkSpec {
     val fps = TextOps.winnowFingerprints(docs, "doc_id", "text", k = 3, w = 4)
       .collect().map(_.getLong(0)).toSeq
     assert(fps == Seq(0L))
-  }
-
-  test("multimodal decode stub preserves ids, sizes, and is deterministic") {
-    import spark.implicits._
-    implicit val s = spark
-    val docs = Seq((0L, "abc"), (1L, "defghij")).toDF("doc_id", "text")
-    val media = Multimodal.asMedia(docs, "doc_id", "text")
-    val decoded = Multimodal.decode(media).collect().sortBy(_.doc_id)
-    assert(decoded.map(_.n_bytes).toSeq == Seq(3, 7))
-    assert(decoded.forall(d => d.width >= 1 && d.width <= 1920))
-    val again = Multimodal.decode(media).collect().sortBy(_.doc_id)
-    assert(decoded.map(_.feature_checksum).toSeq == again.map(_.feature_checksum).toSeq)
-  }
-
-  test("frame sampling emits every stride-th chunk") {
-    import spark.implicits._
-    implicit val s = spark
-    val docs = Seq((0L, "a" * 100)).toDF("doc_id", "text")
-    val media = Multimodal.asMedia(docs, "doc_id", "text")
-    // 100 bytes → 10 frames of 10 → stride 3 keeps frames 0,3,6,9
-    val frames = Multimodal.sampleFrames(media, 10, 3).collect()
-    assert(frames.map(_._2).sorted.toSeq == Seq(0, 3, 6, 9))
-  }
-
-  test("resizePooled: exact equal-area integer means, full-byte coverage " +
-      "at 1x1, fixed output shape, partition determinism") {
-    import spark.implicits._
-    implicit val s = spark
-    // payload "abcd" = bytes 97,98,99,100
-    val docs = Seq((0L, "abcd"), (1L, "a")).toDF("doc_id", "text")
-    val media = Multimodal.asMedia(docs, "doc_id", "text")
-    val r21 = Multimodal.resizePooled(media, 2, 1).collect().sortBy(_.doc_id)
-    // doc 0 → cells [mean(97,98), mean(99,100)] = [97, 99] (floor)
-    assert(r21(0).pixels.toSeq == Seq(97, 99))
-    // doc 1 (1 byte into 2 cells): spans clamp to ≥1 byte — both cells see it
-    assert(r21(1).pixels.toSeq == Seq(97, 97))
-    // 1x1 = exact floor-mean of the whole payload
-    val r11 = Multimodal.resizePooled(media, 1, 1).collect().sortBy(_.doc_id)
-    assert(r11(0).pixels.toSeq == Seq((97 + 98 + 99 + 100) / 4))
-    assert(r11.forall(m => m.w == 1 && m.h == 1 && m.pixels.length == 1))
-    val again = Multimodal.resizePooled(media.repartition(5), 2, 1)
-      .collect().sortBy(_.doc_id)
-    assert(again.map(_.pixels.toSeq).toSeq == r21.map(_.pixels.toSeq).toSeq)
   }
 
   test("binaryFeatures magic bytes match the payload head") {
@@ -487,8 +427,8 @@ class TextMultimodalSpec extends SparkSpec {
     assert(out(8L) == ((false, List("repetition"))))
   }
 
-  test("trainCharNgramProfiles → langIdCharNgram round-trip: trained " +
-      "profiles re-classify their own training languages") {
+  test("trainCharNgramProfiles: every language keeps exactly topK grams, " +
+      "ranked 1..topK by count desc, gram asc") {
     import spark.implicits._
     val docs = Seq(
       (0L, "de", "aber die und aber die und aber"),
@@ -498,17 +438,16 @@ class TextMultimodalSpec extends SparkSpec {
     val prof = TextOps.trainCharNgramProfiles(docs, "lang", "text", 3, 5)
     val rows = prof.collect()
     // deterministic rank: every lang has exactly topK rows, ranks 1..5
+    assert(rows.map(_.getString(0)).toSet == Set("de", "en"))
     assert(rows.groupBy(_.getString(0)).forall { case (_, g) =>
       g.map(_.getAs[Int]("rk")).sorted.toSeq == (1 to 5)
     })
-    val profiles = rows.groupBy(_.getString(0)).toSeq.sortBy(_._1).map {
-      case (lang, g) => lang -> g.sortBy(_.getAs[Int]("rk"))
-        .map(_.getAs[String]("gram")).toSeq
-    }
-    val pred = docs.select(col("doc_id"),
-        TextOps.langIdCharNgram(col("text"), profiles).as("p"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(pred == Map(0L -> "de", 1L -> "de", 2L -> "en", 3L -> "en"))
+    // within a language, rank order is (cnt desc, gram asc)
+    assert(rows.groupBy(_.getString(0)).forall { case (_, g) =>
+      val byRank = g.sortBy(_.getAs[Int]("rk"))
+        .map(r => (-r.getAs[Long]("cnt"), r.getAs[String]("gram"))).toSeq
+      byRank == byRank.sorted
+    })
   }
 
   test("unigramKl: hand-computed micro-exact divergence from the corpus " +

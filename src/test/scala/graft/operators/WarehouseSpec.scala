@@ -37,7 +37,7 @@ class WarehouseSpec extends SparkSpec {
     val filesAfter = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(filesAfter <= 2)
-    assert(Warehouse.snapshotCount(spark, dir) == 40)
+    assert(spark.read.parquet(dir).count() == 40)
     assert(!new java.io.File(dir + ".old").exists())
     assert(!new java.io.File(dir + ".next").exists())
   }
@@ -54,10 +54,10 @@ class WarehouseSpec extends SparkSpec {
     assert(!new java.io.File(dir).exists())
     assert(Warehouse.recoverSwap(dir))
     // the old snapshot is live again and fully readable
-    assert(Warehouse.snapshotCount(spark, dir) == 10)
+    assert(spark.read.parquet(dir).count() == 10)
     // a retried publish then lands the new data normally
     Warehouse.publish(spark, (11 to 15).toDF("id"), dir)
-    assert(Warehouse.snapshotCount(spark, dir) == 5)
+    assert(spark.read.parquet(dir).count() == 5)
     assert(!Warehouse.recoverSwap(dir)) // healthy table → no-op
   }
 
@@ -101,61 +101,8 @@ class WarehouseSpec extends SparkSpec {
     (91 to 95).toDF("id").write.parquet(dir + ".old")
     // next publish must clean the stale .old and proceed, not throw
     Warehouse.publish(spark, (1 to 20).toDF("id"), dir)
-    assert(Warehouse.snapshotCount(spark, dir) == 20)
+    assert(spark.read.parquet(dir).count() == 20)
     assert(!new java.io.File(dir + ".old").exists())
-  }
-
-  test("zorderBy on an empty frame returns it unchanged (no NPE from " +
-      "the all-null min/max row)") {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(Warehouse.zorderBy(empty, "a", "b", 4).isEmpty)
-    // all-null column: same degenerate agg row, same graceful path
-    val allNull = Seq[(Option[Long], Option[Long])](
-      (None, Some(1L)), (None, Some(2L))).toDF("a", "b")
-    assert(Warehouse.zorderBy(allNull, "a", "b", 4).count() == 2)
-  }
-
-  test("z-order clustering prunes on BOTH columns; single-column sort does not") {
-    val events = graft.GraftSession.table(spark, "/root/testdata/sf0.01", "events")
-      .select("event_id", "ts", "user_id", "value")
-    val files = 16
-
-    // layout A: plain range-partition on ts (the q-style single-column sort)
-    val tA = tempDir("graft-wh-zorder") + "/plain"
-    Warehouse.publishVersioned(spark,
-      events.repartitionByRange(files, col("ts")), tA,
-      statsCols = Seq("ts", "user_id"))
-    // layout B: z-ordered on (ts, user_id)
-    val tB = tempDir("graft-wh-zorder") + "/zord"
-    Warehouse.publishVersioned(spark,
-      Warehouse.zorderBy(events, "ts", "user_id", files), tB,
-      statsCols = Seq("ts", "user_id"))
-
-    val Seq(uLo, uHi) = events.agg(min("user_id"), max("user_id"))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long])
-    val width = (uHi - uLo) / 8 // a ~12% slice of the user domain
-    val (qLo, qHi) = (uLo + width * 3, uLo + width * 4)
-
-    val Some((keptPlain, totalPlain)) =
-      Warehouse.pruneCandidates(spark, tA, "user_id", qLo, qHi): @unchecked
-    val Some((keptZ, totalZ)) =
-      Warehouse.pruneCandidates(spark, tB, "user_id", qLo, qHi): @unchecked
-    assert(totalPlain >= files && totalZ >= files)
-    // the ts-sorted layout cannot prune a user_id slice (every file spans
-    // the whole user domain); the z-ordered layout must
-    assert(keptPlain.size >= totalPlain - 1,
-      s"expected no pruning on the plain layout, kept ${keptPlain.size}/$totalPlain")
-    assert(keptZ.size <= totalZ / 2,
-      s"z-order pruned nothing: kept ${keptZ.size}/$totalZ")
-
-    // and the z-layout still answers correctly
-    val got = Warehouse.readVersionedRange(spark, tB, "user_id", qLo, qHi)
-      .collect().map(_.getAs[Long]("event_id")).sorted
-    val expect = events
-      .filter(col("user_id") >= qLo && col("user_id") <= qHi)
-      .collect().map(_.getAs[Long]("event_id")).sorted
-    assert(got.sameElements(expect) && expect.nonEmpty)
   }
 
   test("schema evolution across generations + time travel reads") {
@@ -180,48 +127,6 @@ class WarehouseSpec extends SparkSpec {
     assert(Warehouse.readVersionedAt(spark, table, g1).count() == 2)
     assert(Warehouse.readVersioned(spark, table).count() == 2)
     assert(g1 != g2)
-  }
-
-  test("stats-based file pruning: a day-slice reads fewer files, same rows") {
-    val table = tempDir("graft-wh-stats") + "/events"
-    // 10 days of events, range-partitioned on ts so files carry tight
-    // ranges (the layout a real ingest produces when data arrives in time
-    // order). 8 files over 10 days → a one-day slice must prune most.
-    val events = graft.GraftSession.table(spark, "/root/testdata/sf0.01", "events")
-      .select("event_id", "ts", "user_id", "value")
-      .repartitionByRange(8, col("ts"))
-    Warehouse.publishVersioned(spark, events, table, statsCols = Seq("ts"))
-
-    val full = Warehouse.readVersioned(spark, table)
-    val Some((lo, hi)) = Option(full
-      .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
-      .collect()(0)).map(r => (r.getAs[java.time.LocalDateTime](0),
-        r.getAs[java.time.LocalDateTime](1))): @unchecked
-    assert(java.time.Duration.between(lo, hi).toDays >= 2,
-      "testdata must span multiple days for this test to mean anything")
-    val (dayLo, dayHi) = (lo.toLocalDate.plusDays(1).atStartOfDay(),
-      lo.toLocalDate.plusDays(2).atStartOfDay())
-
-    val Some((kept, total)) =
-      Warehouse.pruneCandidates(spark, table, "ts", dayLo, dayHi): @unchecked
-    assert(total >= 8, s"expected >=8 data files, saw $total")
-    assert(kept.size < total / 2,
-      s"day slice kept ${kept.size}/$total files — stats pruned nothing")
-
-    val pruned = Warehouse.readVersionedRange(spark, table, "ts", dayLo, dayHi)
-      .collect().map(_.getAs[Long]("event_id")).sorted
-    val expect = full
-      .filter(col("ts") >= lit(dayLo) && col("ts") <= lit(dayHi))
-      .collect().map(_.getAs[Long]("event_id")).sorted
-    assert(pruned.sameElements(expect) && expect.nonEmpty)
-
-    // a generation published WITHOUT stats falls back to the full scan
-    val t2 = tempDir("graft-wh-nostats") + "/e2"
-    Warehouse.publishVersioned(spark, full.limit(100), t2)
-    assert(Warehouse.pruneCandidates(spark, t2, "ts", dayLo, dayHi).isEmpty)
-    assert(Warehouse.readVersionedRange(spark, t2, "ts", dayLo, dayHi).count() ==
-      Warehouse.readVersioned(spark, t2)
-        .filter(col("ts") >= lit(dayLo) && col("ts") <= lit(dayHi)).count())
   }
 
   test("scd2Build: runs collapse into chained validity intervals; a value " +
@@ -270,56 +175,6 @@ class WarehouseSpec extends SparkSpec {
     assert(out((4L, "c")) == (("insert", None, Some(40L))))
   }
 
-  test("Delta-log round trip: publishVersioned x3 -> exportDeltaLog -> " +
-      "importDeltaLog reproduces every version's rows and the history depth") {
-    import spark.implicits._
-    val table = tempDir("graft-wh-delta") + "/t"
-    val dest = tempDir("graft-wh-delta") + "/imported"
-    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
-      df.select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    val v2 = Seq((1L, "a2"), (2L, "b"), (3L, "c")).toDF("id", "v")
-    val v3 = Seq((2L, "b"), (3L, "c3")).toDF("id", "v")
-    Warehouse.publishVersioned(spark, v1.repartition(2), table)
-    Warehouse.publishVersioned(spark, v2.repartition(2), table)
-    Warehouse.publishVersioned(spark, v3.repartition(1), table)
-
-    val nVersions = Warehouse.exportDeltaLog(spark, table)
-    assert(nVersions == 3)
-    // the log is well-formed: 20-digit zero-padded version files, and the
-    // replayed live set equals the live generation's data files
-    val logFiles = Files.list(java.nio.file.Paths.get(table, "_delta_log"))
-      .toArray.map(_.toString).sorted
-    assert(logFiles.map(_.split('/').last).toSeq ==
-      Seq("00000000000000000000.json", "00000000000000000001.json",
-        "00000000000000000002.json"))
-    val versions = Warehouse.deltaVersions(spark, table)
-    assert(versions.map(_._1) == Seq(0L, 1L, 2L))
-    val liveGen = Warehouse.liveGeneration(table).get
-    assert(versions.last._2.forall(_.startsWith(liveGen + "/")),
-      s"live file set ${versions.last._2} not from $liveGen")
-    // version 0 carries protocol + metaData with the escaped Spark schema
-    val v0 = Files.readString(java.nio.file.Paths.get(table,
-      "_delta_log", "00000000000000000000.json"))
-    assert(v0.contains("\"protocol\"") && v0.contains("\"metaData\"") &&
-      v0.contains("schemaString"))
-    // versions 1+ remove the prior generation's files before adding
-    val v1log = Files.readString(java.nio.file.Paths.get(table,
-      "_delta_log", "00000000000000000001.json"))
-    assert(v1log.contains("\"remove\"") && v1log.contains("\"add\""))
-
-    val gens = Warehouse.importDeltaLog(spark, table, dest)
-    assert(gens.size == 3)
-    assert(Warehouse.committedGenerations(dest).size == 3)
-    // every version's rows survive the trip; the live snapshots agree
-    val origGens = Warehouse.committedGenerations(table)
-    origGens.zip(gens).foreach { case (og, ng) =>
-      assert(rows(Warehouse.readVersionedAt(spark, table, og)) ==
-        rows(Warehouse.readVersionedAt(spark, dest, ng)), s"version $og != $ng")
-    }
-    assert(rows(Warehouse.readVersioned(spark, dest)) == rows(v3))
-  }
-
   test("deletion vectors: soft delete hides keys without a rewrite, " +
       "re-delete is idempotent, appends union, compact purges physically") {
     import spark.implicits._
@@ -339,48 +194,16 @@ class WarehouseSpec extends SparkSpec {
     assert(Warehouse.deleteWhere(spark, table, "id", col("id") === 5L) == 1L)
     assert(Warehouse.readVersionedClean(spark, table)
       .select("id").collect().map(_.getLong(0)).toSet == ((3L to 10L).toSet - 5L))
-    // physical purge: next generation is tombstone-free and clean by RAW read
-    val gen2 = Warehouse.compactDeletes(spark, table)
+    // physical purge: compaction writes the next generation tombstone-free
+    // and clean by RAW read
+    Warehouse.compactExecute(spark, table, Long.MaxValue)
+    val gen2 = Warehouse.liveGeneration(table).get
     assert(gen2 != gen1)
     assert(Warehouse.deletedKeys(spark, table, gen2).isEmpty)
     assert(Warehouse.readVersioned(spark, table)
       .select("id").collect().map(_.getLong(0)).toSet == ((3L to 10L).toSet - 5L))
     // pre-purge generation (with its tombstones) survives as history
     assert(Warehouse.readVersionedAt(spark, table, gen1).count() == 10L)
-  }
-
-  test("deletion vectors survive the Delta-log export: a Delta-layout " +
-      "read after deleteWhere excludes the deleted keys, and new " +
-      "tombstones refresh an existing export") {
-    import spark.implicits._
-    val table = tempDir("graft-wh-dv-delta") + "/t"
-    val dest = tempDir("graft-wh-dv-delta") + "/imp"
-    Warehouse.publishVersioned(spark,
-      (1L to 10L).map(i => (i, s"row$i")).toDF("id", "v"), table)
-    assert(Warehouse.deleteWhere(spark, table, "id", col("id") <= 3L) == 3L)
-    assert(Warehouse.exportDeltaLog(spark, table) == 1)
-    // a pure-metadata Delta reader (deltaVersions replay + parquet read
-    // of the live file set) must NOT resurrect the soft-deleted keys
-    def deltaLiveIds(): Set[Long] = {
-      val files = Warehouse.deltaVersions(spark, table).last._2
-      spark.read.parquet(files.map(f => s"$table/$f"): _*)
-        .select("id").collect().map(_.getLong(0)).toSet
-    }
-    assert(deltaLiveIds() == (4L to 10L).toSet)
-    // the import side of the round trip honors them too
-    Warehouse.importDeltaLog(spark, table, dest)
-    assert(Warehouse.readVersioned(spark, dest)
-      .select("id").collect().map(_.getLong(0)).toSet == (4L to 10L).toSet)
-    // the raw generation files are untouched (soft delete stays soft)
-    assert(Warehouse.readVersioned(spark, table).count() == 10L)
-    // a LATER tombstone invalidates the materialized copy on re-export
-    assert(Warehouse.deleteWhere(spark, table, "id", col("id") === 7L) == 1L)
-    assert(Warehouse.exportDeltaLog(spark, table) == 1)
-    assert(deltaLiveIds() == ((4L to 10L).toSet - 7L))
-    // re-export with NO new tombstones reuses the materialized copy
-    // (marker fresh): same live set, no error
-    assert(Warehouse.exportDeltaLog(spark, table) == 1)
-    assert(deltaLiveIds() == ((4L to 10L).toSet - 7L))
   }
 
   test("incrementalViewMerge: inserts add, deletes retract, a group " +
@@ -683,24 +506,5 @@ class WarehouseSpec extends SparkSpec {
     val plan = Warehouse.hiddenRangeRead(spark, table, lo, hi)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("__part"))
-  }
-
-  test("hidden bucket transform: equality read prunes to one bucket dir") {
-    import spark.implicits._
-    val table = tempDir("graft-wh-bucket") + "/t"
-    val df = (1L to 200L).toDF("id").withColumn("v", col("id") * 10)
-    Warehouse.publishHiddenPartitioned(spark, df, table,
-      Warehouse.BucketTransform("id", 8))
-    val gen = Warehouse.liveGeneration(table).get
-    assert(Warehouse.hiddenTransformOf(table, gen).map(_.spec)
-      .contains("bucket(8,id)"))
-    val got = Warehouse.hiddenEqualRead(spark, table, lit(42L))
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("v"))).toSeq
-    assert(got == Seq((42L, 420L)))
-    // all 200 ids land somewhere and every bucket dir is 0..7
-    val dirs = new java.io.File(s"$table/$gen").listFiles()
-      .map(_.getName).filter(_.startsWith("__part=")).toSeq
-    assert(dirs.nonEmpty &&
-      dirs.forall(d => (0 to 7).map(b => s"__part=$b").contains(d)))
   }
 }

@@ -92,42 +92,6 @@ class StreamingSpec extends SparkSpec {
       "u3" -> None))
   }
 
-  test("intervalJoin tolerates both sides naming their event-time column " +
-      "identically (references are side-qualified)") {
-    import spark.implicits._
-    // batch mode: watermarks are no-ops, same join semantics
-    val l = Seq(("u1", ts("2024-06-01 10:10:00"), 1.0))
-      .toDF("user_id", "ts", "lval")
-    val r = Seq(("u1", ts("2024-06-01 10:05:00"), 99.0),
-      ("u1", ts("2024-06-01 11:00:00"), 5.0)) // after the left ts → no match
-      .toDF("user_id", "ts", "rval")
-    val out = StreamPipeline.intervalJoin(l, r, "user_id", "ts", "ts", "1 hour")
-      .collect()
-    assert(out.length == 1 && out(0).getAs[Double]("rval") == 99.0)
-  }
-
-  test("stream-stream inner join with watermarks (views enriched by the " +
-      "user's purchases within the hour)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[(String, Timestamp, Double)]
-    val purchases = MemoryStream[(String, Timestamp, Double)]
-    views.addData(("u1", ts("2024-06-01 10:10:00"), 1.0),
-      ("u2", ts("2024-06-01 10:20:00"), 2.0))
-    purchases.addData(("u1", ts("2024-06-01 10:05:00"), 99.0))
-    val q = StreamPipeline.intervalJoin(
-        views.toDF().toDF("user_id", "vts", "vval"),
-        purchases.toDF().toDF("user_id", "pts", "pval"),
-        "user_id", "vts", "pts", "1 hour")
-      .writeStream.format("memory").queryName("ss_join")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.table("ss_join").collect()
-    assert(rows.length == 1)
-    assert(rows(0).getAs[String]("user_id") == "u1")
-    assert(rows(0).getAs[Double]("pval") == 99.0)
-  }
-
   private def wireJson(o: Observation): String =
     s"""{"station_id":"${o.station_id}","station_name":"${o.station_name.get}",
        |"latitude":60.0,"longitude":24.0,"elevation":10.0,
