@@ -5689,8 +5689,8 @@ object SparkEntry {
         SELECT id AS doc_id, CAST(r AS BIGINT) AS rank_micro FROM r3
         ORDER BY rank_micro DESC, doc_id""")),
 
-    // Fuzzy record linkage: loose exact-Jaccard blocking (≥ 0.5,
-    // lossless prefix-filtered postings join) re-scored by graft's native
+    // Fuzzy record linkage: loose exact-Jaccard blocking (≥ 0.5, the
+    // ngramJaccardPairs postings self-join) re-scored by graft's native
     // codegen'd jaro_winkler expression, keep ≥ 0.9 — the record-linkage
     // confirm that tolerates transpositions and boosts shared prefixes
     // where plain edit distance (q103) charges every edit equally. The
@@ -6813,9 +6813,9 @@ object SparkEntry {
         val ev = t(s, dir, "events").filter(col("ts").isNotNull)
           .select("event_id", "user_id", "ts")
         val tbl = tmpWorkDir("graft_hidden", dir) + "/events"
-        val g1 = Warehouse.publishHiddenPartitioned(s, ev, tbl,
+        val g1 = Warehouse.publishHiddenPartitioned(ev, tbl,
           Warehouse.TimeTransform("ts", "day"))
-        val g2 = Warehouse.publishHiddenPartitioned(s, ev, tbl,
+        val g2 = Warehouse.publishHiddenPartitioned(ev, tbl,
           Warehouse.TimeTransform("ts", "hour"))
         val (lo, hi) = ("2024-01-10 06:00:00", "2024-01-12 18:00:00")
         def probe(gen: String, layout: String) = {
@@ -8542,12 +8542,8 @@ object SparkEntry {
     "q219_threshold_sweep" -> Q(
       (s, dir) => {
         val pairs = graft.CacheScope.register(
-          // direct inverted-index count, not the prefix filter: both are
-          // exact (identical pair set), and at t=0.5 the prefix path's
-          // candidate set is ~1600x its survivor count so its confirm
-          // re-join dominates (r12 measured 7.5 s prefix vs 2.2 s direct)
           Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id",
-            "text", 3, 0.5, prefixFilter = false))
+            "text", 3, 0.5))
         val ids = pairs.select(explode(array(col("id_a"), col("id_b")))
           .as("id"), col("jaccard"))
         val pc = pairs.agg(
@@ -9856,7 +9852,7 @@ object SparkEntry {
         val li = t(s, dir, "lineitem").select(col("l_orderkey"),
           col("l_returnflag"),
           round(col("l_extendedprice") * 100).cast("long").as("cents"))
-        Warehouse.publishVersioned(s, li.repartition(64), table)
+        Warehouse.publishVersioned(li.repartition(64), table)
         Warehouse.deleteWhere(s, table, "l_orderkey",
           col("l_orderkey") % 100 === 0)
         Warehouse.compactExecute(s, table, targetSize = 1L << 20)
@@ -11428,11 +11424,9 @@ object SparkEntry {
           .select(col("o_orderkey"), col("o_orderdate"))
         val cut97 = lit("1997-01-01 00:00:00").cast("timestamp")
         val cut98 = lit("1998-01-01 00:00:00").cast("timestamp")
-        Warehouse.publishVersioned(s, o.filter(col("o_orderdate") < cut97),
-          table)
-        Warehouse.publishVersioned(s, o.filter(col("o_orderdate") < cut98),
-          table)
-        Warehouse.publishVersioned(s, o, table)
+        Warehouse.publishVersioned(o.filter(col("o_orderdate") < cut97), table)
+        Warehouse.publishVersioned(o.filter(col("o_orderdate") < cut98), table)
+        Warehouse.publishVersioned(o, table)
         val removed = Warehouse.vacuum(table, keepHistory = 1)
         val retained = Warehouse.committedGenerations(table).sorted
         val live = Warehouse.readVersioned(s, table)

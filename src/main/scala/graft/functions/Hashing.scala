@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   *     correctness oracle (`CAST('0x'||substr(md5(s),1,15) AS BIGINT)`), is
   *     always non-negative (so signed/unsigned orderings agree), and stays
   *     inside whole-stage codegen (all built-in expressions, no UDFs).
-  *   - [[hFast]] — xxHash64, Spark's codegen'd native hash, for hot paths
-  *     where the oracle does not need to replay the hash (e.g. LSH bucket
-  *     ids whose downstream output is exact-verified anyway). ~10x cheaper
-  *     than md5; use it at the 100 TB scale, keep h60 for oracle-checked
-  *     signatures.
+  *   - [[hFast]] — seeded xxHash64, the hash of the MinHash signatures and
+  *     LSH bucket ids (not oracle-replayable; their downstream output is
+  *     exact-verified anyway). ~10x cheaper than md5. The native
+  *     `minhash_sig` / `lsh_buckets` kernels compute it inline; keep h60
+  *     for oracle-checked signatures.
   */
 object Hashing {
 
@@ -36,7 +36,10 @@ object Hashing {
 
   def h60Sql(e: String, seed: Int): String = h60Sql(s"'$seed:' || $e")
 
-  /** Fast path: Spark-native xxHash64 (not oracle-replayable). */
+  /** Spark-native seeded xxHash64 (not oracle-replayable) as a composed
+    * column: the reference the native MinHash kernels
+    * ([[MinHashSig]], [[LshBuckets]]) must hash bit-identically to, which
+    * `MinHashKernelsSpec` checks. */
   def hFast(c: Column, seed: Int): Column = xxhash64(lit(seed), c)
 
   /** Driver-side mirror of [[h60]] for deterministic constants (e.g. LSH

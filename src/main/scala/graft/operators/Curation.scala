@@ -24,12 +24,9 @@ import graft.functions.TextFns
   * confirmation, so false candidates never survive and the only deviation
   * from the exact join is an LSH miss (~1.6e-7 per true pair at the
   * corpus's observed similarity floor, per q21's banding analysis —
-  * deterministic given the fixed seeded hash families). `maxShingleDf`
-  * caps boilerplate-shingle postings before signatures (the default keeps
-  * exact semantics). For provably-lossless candidates at t >= ~0.7, the
-  * drop-in alternative is [[Dedup.ngramJaccardPairs]] with
-  * `prefixFilter = true` — same output contract, higher constant factor
-  * (measured slower on this corpus shape).
+  * deterministic given the fixed seeded hash families). The exact
+  * reference is [[Dedup.ngramJaccardPairs]] — same output contract, no
+  * LSH miss, but Σdf² postings pairs.
   */
 object Curation {
 
@@ -38,7 +35,7 @@ object Curation {
     */
   def curate(docs: DataFrame, idCol: String, textCol: String, langCol: String,
       minTokens: Int, allowedLangs: Seq[String], fingerprintPrefix: Int,
-      nearDupJac: Double, maxShingleDf: Int = Int.MaxValue): DataFrame = {
+      nearDupJac: Double): DataFrame = {
     val id = col(idCol)
     val staged = docs.select(id,
       (size(TextFns.tokens(col(textCol))) >= minTokens).as("__q_ok"),
@@ -52,7 +49,7 @@ object Curation {
       .select(id)
     val nearDrops = Dedup.minhashNearDups(
         docs.join(exactKept, idCol), idCol, textCol, 3, k = 64, bands = 16,
-        minJac = nearDupJac, maxShingleDf = maxShingleDf)
+        minJac = nearDupJac)
       .select(col("id_b").as(idCol)).distinct()
     staged
       .join(exactKept.withColumn("__exact_kept", lit(true)), Seq(idCol), "left")

@@ -21,10 +21,10 @@ import graft.functions.{Hashing, TextFns}
   * Scale notes (100 TB): every path here is shuffle-on-key only — shingle
   * explosion shuffles on the shingle, LSH shuffles on (band, bucket), and no
   * stage ever materializes the document cross product. Ultra-frequent
-  * shingles (boilerplate) are the one skew risk: cap them with `maxShingleDf`
-  * which drops shingles appearing in more than that many documents from
-  * candidate generation (a standard prefix-filtering relaxation; leave at
-  * Int.MaxValue for oracle-exact semantics).
+  * shingles (boilerplate) are the one skew risk of the exact n-gram join:
+  * its `maxShingleDf` drops shingles appearing in more than that many
+  * documents before the self-join ([[capDf]]; leave at Int.MaxValue for
+  * oracle-exact semantics).
   */
 object Dedup {
 
@@ -173,58 +173,30 @@ object Dedup {
     * `|A∩B| / |A∪B| >= minJac`, computed by counting intersections
     * directly on the inverted-index self-join (shuffle key = shingle hash,
     * never the doc cross product; cost = Σ_sh df² collision pairs).
-    *
-    * `prefixFilter=true` switches candidate generation to LOSSLESS prefix
-    * filtering (the PPJoin bound): only each document's first
-    * `|A| - ceil(t*|A|) + 1` shingles under a rare-first (df, hash) global
-    * order are indexed — if jac(A,B) >= t then |A∩B| >= t*|A|, so the
-    * intersection cannot hide entirely in the skipped suffix and prefixes
-    * must collide. Candidates are then exactly confirmed. Wins at high
-    * thresholds (t >= ~0.7) where candidates are rare; at moderate
-    * thresholds over high-overlap corpora the direct count is cheaper
-    * (measured: 8s direct vs 10s prefix at t=0.5, 5k docs).
+    * `maxShingleDf` drops boilerplate shingles first ([[capDf]]).
     *
     * Returns (id_a, id_b, inter, size_a, size_b, jaccard), id_a < id_b.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minJac: Double, maxShingleDf: Int = Int.MaxValue,
-      prefixFilter: Boolean = false): DataFrame = {
+      n: Int, minJac: Double, maxShingleDf: Int = Int.MaxValue): DataFrame = {
     val sh0 = graft.CacheScope.register(shingleSets(docs, idCol, textCol, n))
     val sh = capDf(sh0, maxShingleDf)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-    val confirmed = if (prefixFilter) {
-      val dfs = sh.groupBy("sh").agg(count(lit(1)).as("__df"))
-      // cached: the candidate self-join references the prefix relation on
-      // BOTH sides — uncached, the df join + ranking window run twice
-      // (measured as the bulk of q156's cost)
-      val prefix = graft.CacheScope.register(
-        sh.join(dfs, "sh").join(sizes, "id")
-          .withColumn("__rnk", row_number().over(
-            Window.partitionBy("id").orderBy(col("__df"), col("sh"))))
-          .filter(col("__rnk") <= col("sz") - ceil(lit(minJac) * col("sz")) + 1)
-          .select("id", "sh"))
-      val cands = prefix.as("a").join(prefix.as("b"),
-          col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-      confirmJaccard(cands, sh, sizes, minJac)
-    } else {
-      // note: a lossless size-ratio prune (min >= t*max inside the join
-      // condition) was measured SLOWER here — joining sizes into the
-      // postings costs more than the prune saves when doc sizes cluster;
-      // revisit only for heavy-tailed size distributions
-      val inter = sh.as("a").join(sh.as("b"),
-          col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-        .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .agg(count(lit(1)).as("inter"))
-      inter
-        .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "size_b"), "id_b")
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
-        .filter(col("jaccard") >= minJac)
-    }
-    confirmed.select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard")
+    // note: a lossless size-ratio prune (min >= t*max inside the join
+    // condition) was measured SLOWER here — joining sizes into the
+    // postings costs more than the prune saves when doc sizes cluster;
+    // revisit only for heavy-tailed size distributions
+    val inter = sh.as("a").join(sh.as("b"),
+        col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .agg(count(lit(1)).as("inter"))
+    inter
+      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "size_a"), "id_a")
+      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "size_b"), "id_b")
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
+      .filter(col("jaccard") >= minJac)
+      .select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard")
   }
 
   /** Shingle-set CONTAINMENT pairs — the asymmetric near-dup relation
@@ -238,16 +210,12 @@ object Dedup {
     * Emits (id_a, id_b, inter, size_a, size_b, cont_a, cont_b) for every
     * ordered pair where EITHER direction clears `minCont` — containments
     * are exact IEEE divisions of exact integer counts. Scale shape:
-    * identical to [[ngramJaccardPairs]]' inverted-index form (the one
-    * shuffle is the postings self-join keyed on the shingle;
-    * `maxShingleDf` caps boilerplate fan-out), with the same
-    * df-cap-changes-semantics caveat.
+    * identical to [[ngramJaccardPairs]]' uncapped inverted-index form
+    * (the one shuffle is the postings self-join keyed on the shingle).
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minCont: Double, maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    val sh = capDf(
-      graft.CacheScope.register(shingleSets(docs, idCol, textCol, n)),
-      maxShingleDf)
+      n: Int, minCont: Double): DataFrame = {
+    val sh = graft.CacheScope.register(shingleSets(docs, idCol, textCol, n))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
     val inter = sh.as("a").join(sh.as("b"),
         col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
@@ -304,8 +272,8 @@ object Dedup {
 
   /** Drop shingles appearing in more than `maxShingleDf` documents — the
     * boilerplate-skew relaxation (a shingle in d docs costs d² join pairs
-    * in the direct form and floods LSH buckets in the banded form).
-    * Int.MaxValue = keep everything (exact semantics).
+    * in [[ngramJaccardPairs]]' postings self-join). Int.MaxValue = keep
+    * everything (exact semantics).
     *
     * Choosing the cap: a shingle shared by d docs contributes d(d-1)/2
     * candidate pairs, so worst-case candidates ≈ Σ capped-df² — pick the
@@ -328,30 +296,10 @@ object Dedup {
       .filter(col("__df") <= maxShingleDf) // drops boilerplate shingles
       .drop("__df")
 
-  /** Exact-Jaccard confirmation for a candidate pair set: gather each
-    * pair's postings by id, count the intersection, filter by threshold.
-    * Cost scales with |candidates| * avg set size.
-    */
-  private def confirmJaccard(cands: DataFrame, sh: DataFrame, sizes: DataFrame,
-      minJac: Double): DataFrame = {
-    val aSh = sh.select(col("id").as("id_a"), col("sh").as("__sh"))
-    val bSh = sh.select(col("id").as("id_b"), col("sh").as("__sh"))
-    val inter = cands.join(aSh, "id_a").join(bSh, Seq("id_b", "__sh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "size_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "size_b"), "id_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
-      .filter(col("jaccard") >= minJac)
-  }
-
   /** Exact-Jaccard confirmation over the ARRAY relation: each candidate
     * pair fetches both documents' shingle arrays (two id-keyed joins —
     * the candidate set is the small side) and counts the intersection
-    * with `array_intersect` in the projection. Zero aggregate shuffles,
-    * versus [[confirmJaccard]]'s postings join + pair groupBy; use the
-    * postings form when per-document sets are too large to sit on one row.
+    * with `array_intersect` in the projection: no aggregate shuffle.
     */
   private def confirmJaccardArr(cands: DataFrame, arr: DataFrame,
       minJac: Double): DataFrame = {
@@ -367,10 +315,14 @@ object Dedup {
       .select("id_a", "id_b", "inter", "size_a", "size_b", "jaccard")
   }
 
-  /** MinHash signatures: k INDEPENDENT hash families over the posting
-    * keys via seeded xxHash64 (codegen'd, ~2ns/hash), one `min` aggregate
-    * per family — a single shuffle on the document id — returned as
-    * (id, sig) with the k minima in one `array<bigint>`.
+  /** MinHash signatures over the array relation of [[shingleArrays]]:
+    * k INDEPENDENT hash families — the minimum of seeded xxHash64
+    * (`xxhash64(seed, x)`, bit-identical to [[Hashing.hFast]]) over each
+    * document's 60-bit shingle keys — as the native `minhash_sig` kernel
+    * in a single PROJECTION, returning (id, sig) with the k minima in one
+    * `array<bigint>`. The signature stage costs no shuffle at all; at
+    * 100 TB that removes a full-corpus exchange from the dedup critical
+    * path.
     *
     * Why not double-hashing (h1 + i*h2): without a modular wrap the i*h2
     * term dominates the argmin for larger i, collapsing the families onto
@@ -379,19 +331,6 @@ object Dedup {
     * are NOT safe for argmin sketches. xxHash64 families are deterministic
     * across runs, which is all the exact-confirm output needs — the oracle
     * checks the confirmed Jaccard, never the signatures.
-    */
-  def minhashSignatures(shingles: DataFrame, k: Int): DataFrame = {
-    val aggs = (0 until k).map(i => min(Hashing.hFast(col("sh"), i)))
-    shingles.groupBy("id").agg(array(aggs: _*).as("sig"))
-  }
-
-  /** [[minhashSignatures]] over the array relation of [[shingleArrays]]:
-    * the same k seeded-xxHash64 families and the same argmin per family
-    * (bit-identical signatures — `xxhash64(seed, x)` over the same 60-bit
-    * keys), but as the native `minhash_sig` kernel in a single
-    * PROJECTION, returning (id, sig). The signature stage costs no shuffle
-    * at all; at 100 TB that removes a full-corpus exchange from the dedup
-    * critical path.
     */
   def minhashSignaturesArr(docShingles: DataFrame, k: Int): DataFrame =
     withSignature(docShingles, k).select("id", "sig")
@@ -429,31 +368,18 @@ object Dedup {
     * [[ngramJaccardPairs]]; LSH only prunes the search space).
     */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, minJac: Double,
-      maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    if (maxShingleDf == Int.MaxValue) {
-      // Uncapped fast path: per-doc arrays make shingle sets, signatures
-      // and set sizes pure projections, and the confirm an
-      // array_intersect — the only shuffle left is the (band, bucket)
-      // candidate join itself. ONE relation (id, shs, sz, sig) is cached:
-      // the LSH self-join reads its signatures on BOTH sides and the
-      // confirm its arrays; uncached, shingling and the k-family hashing
-      // would run once per reference.
-      val arr = graft.CacheScope.register(
-        withSignature(shingleArrays(docs, idCol, textCol, n), k))
-      val cands = lshCandidatePairs(arr, k, bands)
-      confirmJaccardArr(cands, arr, minJac)
-        .select("id_a", "id_b", "jaccard")
-    } else {
-      // Frequency-capped path: the df computation is a shuffle on the
-      // shingle anyway, so the exploded postings relation stays the base.
-      val sh = graft.CacheScope.register(
-        capDf(shingleSets(docs, idCol, textCol, n), maxShingleDf))
-      val cands = lshCandidatePairs(minhashSignatures(sh, k), k, bands)
-      val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-      confirmJaccard(cands, sh, sizes, minJac)
-        .select("id_a", "id_b", "jaccard")
-    }
+      n: Int, k: Int, bands: Int, minJac: Double): DataFrame = {
+    // Per-doc arrays make shingle sets, signatures and set sizes pure
+    // projections, and the confirm an array_intersect — the only shuffle
+    // left is the (band, bucket) candidate join itself. ONE relation
+    // (id, shs, sz, sig) is cached: the LSH self-join reads its signatures
+    // on BOTH sides and the confirm its arrays; uncached, shingling and
+    // the k-family hashing would run once per reference.
+    val arr = graft.CacheScope.register(
+      withSignature(shingleArrays(docs, idCol, textCol, n), k))
+    val cands = lshCandidatePairs(arr, k, bands)
+    confirmJaccardArr(cands, arr, minJac)
+      .select("id_a", "id_b", "jaccard")
   }
 
   /** Persistable LSH INDEX for a document corpus, as the two relations a
@@ -528,7 +454,7 @@ object Dedup {
     * bucket self-joins.
     *
     * Signatures use the md5-based seeded [[graft.functions.Hashing.h60]]
-    * families (NOT the xxhash production fast path) precisely so the
+    * families (NOT the xxHash64 ones of [[minhashSignaturesArr]]) so the
     * whole sweep — including each candidate set itself — replays in the
     * oracle engine. s_star = (1/b)^(1/r) (the S-curve inflection) is
     * computed once driver-side and emitted as a literal to both plans.
@@ -632,8 +558,8 @@ object Dedup {
   }
 
   /** Fuzzy record linkage: loose EXACT-Jaccard blocking (the recall net —
-    * [[ngramJaccardPairs]] with the lossless positional prefix filter, so
-    * blocking recall is 1.0 by construction, unlike a banded-LSH block
+    * [[ngramJaccardPairs]]' direct intersection count, so blocking recall
+    * is 1.0 by construction, unlike a banded-LSH block
     * whose per-pair recall at a LOW threshold decays to coin-flip levels)
     * re-scored by JARO-WINKLER similarity over the normalized text and
     * kept at `minJw`. The edit-distance confirm (q103) charges every edit
@@ -648,23 +574,14 @@ object Dedup {
     * (JaroWinklerSpec), so the output similarity is replayable.
     *
     * Scale shape: the O(len_a · len_b) scorer runs only on blocked
-    * candidate pairs (prefix-filtered postings join, ≪ quadratic); two
+    * candidate pairs (the postings self-join, ≪ quadratic); two
     * id-keyed joins fetch exactly the candidate texts.
     *
     * Returns (id_a, id_b, jaccard, jw) ordered-pair rows.
     */
   def jaroWinklerLinkage(docs: DataFrame, idCol: String, textCol: String,
       n: Int, blockJac: Double, minJw: Double): DataFrame = {
-    // Blocking-path choice by threshold (both paths are exact — identical
-    // output; see ngramJaccardPairs): the prefix filter wins only where
-    // candidates are rare (t >= ~0.7). At moderate thresholds its
-    // candidate set approaches the direct join's collision set ANYWAY
-    // (r12 measured at t=0.5: 409k candidates -> 256 survivors; prefix
-    // path 7.5 s vs 2.2 s direct on the same corpus), so the extra
-    // prefix machinery (df ranking window + candidate distinct + postings
-    // re-join confirm) is pure overhead below the crossover.
-    val pairs = ngramJaccardPairs(docs, idCol, textCol, n, blockJac,
-      prefixFilter = blockJac >= 0.7)
+    val pairs = ngramJaccardPairs(docs, idCol, textCol, n, blockJac)
     val txt = docs.select(col(idCol).as("__tid"),
       TextFns.normalized(col(textCol)).as("__t"))
     pairs
@@ -704,51 +621,36 @@ object Dedup {
     * contract as [[minhashNearDups]]).
     *
     * Scale shape: the corpus NEVER self-joins. Both sides shingle and
-    * sign in one pass over their union (uncapped: projections with no
-    * shuffle; df-capped: the postings' shuffles on the shingle and on the
-    * doc id); the corpus banding relation
-    * (bands rows/doc) then joins the BENCHMARK banding relation, which is
-    * tiny (eval suites ≪ corpus) and broadcast — so candidate generation
+    * sign in one pass over their union (projections with no shuffle); the
+    * corpus banding relation (bands rows/doc) then joins the BENCHMARK
+    * banding relation, which is tiny (eval suites ≪ corpus) and
+    * broadcast — so candidate generation
     * is a map-side probe over the corpus scan, and only candidate pairs
     * (a ≪ |corpus| set) reach the exact confirm. Ids must be disjoint
     * across the two inputs.
     */
   def fuzzyDecontaminate(docs: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int, k: Int, bands: Int,
-      minJac: Double, maxShingleDf: Int = Int.MaxValue): DataFrame = {
+      minJac: Double): DataFrame = {
     val both = docs.select(col(idCol), col(textCol))
       .unionByName(benchmark.select(col(idCol), col(textCol)))
     val benchIds = benchmark.select(col(idCol).as("id")).distinct()
-    // cached in both paths: the signature relation feeds BOTH the corpus
-    // and benchmark banding branches — without the cache each branch
+    // cached, as in [[minhashNearDups]]: the one (id, shs, sz, sig)
+    // projection feeds BOTH the corpus and benchmark banding branches and
+    // the array_intersect confirm — without the cache each reference
     // would recompute the most expensive stage
-    val (sigs, confirm) = if (maxShingleDf == Int.MaxValue) {
-      // Uncapped fast path — see [[minhashNearDups]]: one cached
-      // (id, shs, sz, sig) projection feeds the banding and the
-      // array_intersect confirm; no aggregate shuffle in the pipeline.
-      val arr = graft.CacheScope.register(
-        withSignature(shingleArrays(both, idCol, textCol, n), k))
-      (arr, (cands: DataFrame) => confirmJaccardArr(cands, arr, minJac))
-    } else {
-      // one posting relation for both sides: shingle df (and so the cap
-      // and the confirm) is computed over the SAME universe the oracle
-      // replays
-      val sh = graft.CacheScope.register(
-        capDf(shingleSets(both, idCol, textCol, n), maxShingleDf))
-      val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-      (graft.CacheScope.register(minhashSignatures(sh, k)),
-        (cands: DataFrame) => confirmJaccard(cands, sh, sizes, minJac))
-    }
+    val arr = graft.CacheScope.register(
+      withSignature(shingleArrays(both, idCol, textCol, n), k))
     val corpusBands = lshBands(
-      sigs.join(broadcast(benchIds), Seq("id"), "left_anti"), k, bands)
+      arr.join(broadcast(benchIds), Seq("id"), "left_anti"), k, bands)
     val benchBands = lshBands(
-      sigs.join(broadcast(benchIds), Seq("id"), "left_semi"), k, bands)
+      arr.join(broadcast(benchIds), Seq("id"), "left_semi"), k, bands)
     val cands = corpusBands.as("c")
       .join(broadcast(benchBands.as("b")),
         col("c.band") === col("b.band") && col("c.bucket") === col("b.bucket"))
       .select(col("c.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    confirm(cands)
+    confirmJaccardArr(cands, arr, minJac)
       .select(col("id_a").as("corpus_id"), col("id_b").as("bench_id"),
         col("jaccard"))
   }

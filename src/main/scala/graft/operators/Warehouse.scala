@@ -114,17 +114,6 @@ object Warehouse {
       .filter(col("change_type") =!= "unchanged")
   }
 
-  /** Compaction: rewrite a directory into ~`targetFiles` files (small-file
-    * pathology from frequent micro-batch appends). Reads the CURRENT
-    * snapshot, writes a new generation dir, atomically swaps.
-    */
-  def compact(spark: SparkSession, dir: String, targetFiles: Int): Long = {
-    val df = spark.read.parquet(dir)
-    val n = df.count()
-    publish(spark, df.repartition(targetFiles), dir)
-    n
-  }
-
   /** Write `df` beside `dir` and atomically swap it into place (write to
     * `<dir>.next`, move old to `<dir>.old`, rename, drop old).
     *
@@ -174,39 +163,29 @@ object Warehouse {
   //
   // Table-format-lite: each publish writes an immutable generation
   // directory `gen-NNNNNNNN/` under the table root and then atomically
-  // flips a single `_MANIFEST` pointer file at it. Readers resolve the
-  // manifest first, so
+  // creates a live marker for it. Readers resolve the marker first, so
   //   - there is NO instant where the table path is missing (the
   //     rename-swap weakness),
   //   - in-flight queries keep reading the generation they resolved
   //     (snapshot isolation) until `vacuum` drops it,
-  //   - on an object store the commit is a single-key PUT — the same
-  //     primitive Delta/Iceberg metadata commits reduce to (single writer
-  //     assumed; concurrent writers additionally need a conditional PUT).
+  //   - on an object store the commit is a single-key conditional PUT —
+  //     the same primitive Delta/Iceberg metadata commits reduce to.
   //
-  // CONCURRENT WRITERS (round-10 verdict #6 — the original protocol was
-  // single-writer: two publishers could compute the same generation
-  // number, interleave stage→flip, and lose a generation or point the
-  // manifest at a dir both had written into). Three per-generation
-  // files make every step a CAS on the local FS (each maps to a
-  // conditional PUT on an object store):
+  // CONCURRENT WRITERS: two publishers could compute the same generation
+  // number and interleave stage→flip. Three per-generation files make
+  // every step a CAS on the local FS (each maps to a conditional PUT on
+  // an object store):
   //   - CLAIM `gen-NNNNNNNN.claim` — created with CREATE_NEW before any
   //     data write; reserves the number. The loser of a same-number race
   //     gets [[ConcurrentPublishException]] (clean, retryable, BEFORE it
   //     wastes a data write) and never touches the winner's dir.
   //   - COMMIT `gen-NNNNNNNN/_COMMITTED` — written by the slot owner
-  //     only (no shared read-modify-write commit log any more; the
-  //     legacy `_COMMITS` file is still READ for tables published by
-  //     older code).
+  //     only (no shared read-modify-write commit log).
   //   - LIVE `_MANIFEST.gen-NNNNNNNN` marker, CREATE_NEW — readers
   //     resolve the HIGHEST-numbered marker, so the live pointer is
   //     monotone by construction: a slower writer committing an older
-  //     claimed number can never flip the table backward. The legacy
-  //     single `_MANIFEST` file is still written (debuggability + old
-  //     readers) but is advisory once any marker exists.
+  //     claimed number can never flip the table backward.
 
-  private val ManifestName = "_MANIFEST"
-  private val CommitsName = "_COMMITS"
   private val LiveMarkerPrefix = "_MANIFEST.gen-"
   private val ClaimSuffix = ".claim"
   private val CommittedName = "_COMMITTED"
@@ -218,8 +197,10 @@ object Warehouse {
   final class ConcurrentPublishException(msg: String)
     extends RuntimeException(msg)
 
-  private def listRoot(table: String)(keep: String => Boolean): Seq[String] = {
-    val root = Paths.get(table)
+  /** The sorted names of the entries of `dir` that `keep` accepts; empty
+    * when `dir` does not exist. */
+  private def listDir(dir: String)(keep: String => Boolean): Seq[String] = {
+    val root = Paths.get(dir)
     if (!Files.exists(root)) Seq.empty
     else {
       val stream = Files.list(root)
@@ -235,38 +216,21 @@ object Warehouse {
   }
 
   /** The live generation name of a versioned table, if one was published:
-    * the highest-numbered `_MANIFEST.gen-*` marker, or the legacy single
-    * `_MANIFEST` pointer if it names a higher generation (tables written
-    * by pre-CAS code keep resolving).
+    * the highest-numbered `_MANIFEST.gen-*` marker.
     */
-  def liveGeneration(table: String): Option[String] = {
-    val markers = listRoot(table)(_.startsWith(LiveMarkerPrefix))
-      .map(_.stripPrefix("_MANIFEST."))
-    val legacy = {
-      val m = Paths.get(table, ManifestName)
-      if (Files.exists(m)) Some(Files.readString(m).trim).filter(_.nonEmpty)
-      else None
-    }
-    (markers ++ legacy).sorted.lastOption
-  }
+  def liveGeneration(table: String): Option[String] =
+    listDir(table)(_.startsWith(LiveMarkerPrefix))
+      .map(_.stripPrefix("_MANIFEST.")).lastOption
 
-  /** Every generation that completed its data write (the commit log) —
-    * the set `vacuum` may legally keep as history. An orphan dir whose
-    * publish crashed mid-write is on disk but never in this list, so it
-    * can never shadow a real, fully-written historical generation.
-    * Union of the per-generation `_COMMITTED` records (CAS protocol)
-    * and the legacy `_COMMITS` file (pre-CAS tables).
+  /** Every generation that completed its data write (its `_COMMITTED`
+    * record exists) — the set `vacuum` may legally keep as history. An
+    * orphan dir whose publish crashed mid-write is on disk but never in
+    * this list, so it can never shadow a real, fully-written historical
+    * generation.
     */
-  def committedGenerations(table: String): Seq[String] = {
-    val c = Paths.get(table, CommitsName)
-    val legacy =
-      if (!Files.exists(c)) Seq.empty[String]
-      else Files.readString(c).split('\n').map(_.trim).filter(_.nonEmpty)
-        .toIndexedSeq
-    val marked = listGenerations(table)
+  def committedGenerations(table: String): Seq[String] =
+    listGenerations(table)
       .filter(g => Files.exists(Paths.get(table, g, CommittedName)))
-    (legacy ++ marked).distinct.sorted
-  }
 
   /** CAS-claim the next free generation number: atomically create
     * `gen-NNNNNNNN.claim` (CREATE_NEW). The single-attempt loser of a
@@ -300,8 +264,7 @@ object Warehouse {
 
   /** Commit + flip a fully-staged generation: write the owned
     * `_COMMITTED` record, then CAS-create the numbered live marker
-    * (readers resolve the max marker — monotone, never backward), then
-    * refresh the advisory legacy `_MANIFEST`.
+    * (readers resolve the max marker — monotone, never backward).
     */
   private def commitAndFlip(table: String, gen: String): Unit = {
     writeAtomic(Paths.get(table, gen, CommittedName), gen)
@@ -313,7 +276,6 @@ object Warehouse {
           s"live marker for $gen of $table already exists — the slot " +
             "was committed by another writer; retry the publish")
     }
-    writeAtomic(Paths.get(table, ManifestName), liveGeneration(table).get)
   }
 
   private def writeAtomic(path: Path, content: String): Unit = {
@@ -324,15 +286,14 @@ object Warehouse {
   }
 
   /** Publish `df` as the next generation of `table`; returns the
-    * generation name. Order: data write → commit-log append → manifest
-    * flip. A crash before the commit-log append leaves an orphan
+    * generation name. Order: data write → `_COMMITTED` record → live
+    * marker. A crash before the commit record leaves an orphan
     * generation dir (readers unaffected, `vacuum` removes it, the next
-    * publish skips past its number); a crash between append and flip
+    * publish skips past its number); a crash between record and marker
     * leaves a committed-but-never-live generation (complete data, ages
     * out as history).
     */
-  def publishVersioned(spark: SparkSession, df: DataFrame,
-      table: String): String = {
+  def publishVersioned(df: DataFrame, table: String): String = {
     val gen = claimGeneration(table)
     df.write.mode("overwrite").parquet(s"$table/$gen")
     commitAndFlip(table, gen)
@@ -434,8 +395,8 @@ object Warehouse {
     * would land in a default directory no range predicate could ever
     * keep honestly.
     */
-  def publishHiddenPartitioned(spark: SparkSession, df: DataFrame,
-      table: String, transform: TimeTransform): String = {
+  def publishHiddenPartitioned(df: DataFrame, table: String,
+      transform: TimeTransform): String = {
     val gen = claimGeneration(table)
     df.filter(col(transform.source).isNotNull)
       .withColumn(PartColName, transform.value(col(transform.source)))
@@ -479,7 +440,7 @@ object Warehouse {
       hi: String): (Seq[String], Int) = {
     val tf = hiddenTransformOf(table, gen).getOrElse(
       sys.error(s"$gen of $table has no partition spec"))
-    val vals = listRoot(s"$table/$gen")(_.startsWith(PartColName + "="))
+    val vals = listDir(s"$table/$gen")(_.startsWith(PartColName + "="))
       .map(_.stripPrefix(PartColName + "="))
     val (fl, fh) = (tf.floor(lo), tf.floor(hi))
     (vals.filter(v => v >= fl && v <= fh).sorted, vals.size)
@@ -511,8 +472,8 @@ object Warehouse {
     * recently COMMITTED before it (reader grace / time travel — only
     * fully-written generations count; a partially-written orphan from a
     * crashed publish is never retained as history, whatever its number).
-    * Returns what was deleted and prunes the commit log to match.
-    * Single-writer: run from the publisher, not concurrently with one.
+    * Returns what was deleted. Single-writer: run from the publisher, not
+    * concurrently with one.
     */
   def vacuum(table: String, keepHistory: Int = 1): Seq[String] = {
     val live = liveGeneration(table)
@@ -537,32 +498,20 @@ object Warehouse {
     // forever.
     val liveNum = live.map(_.stripPrefix("gen-").toLong).getOrElse(Long.MaxValue)
     val dirs = listGenerations(table).toSet
-    val orphanClaims = listRoot(table)(_.endsWith(ClaimSuffix))
+    val orphanClaims = listDir(table)(_.endsWith(ClaimSuffix))
       .filter { c =>
         val g = c.stripSuffix(ClaimSuffix)
         !dirs.contains(g) && g.stripPrefix("gen-").toLong < liveNum
       }
     orphanClaims.foreach(c => Files.deleteIfExists(Paths.get(table, c)))
-    writeAtomic(Paths.get(table, CommitsName),
-      committed.filter(keep).mkString("\n"))
     doomed ++ orphanClaims
   }
 
-  private def listGenerations(table: String): Seq[String] = {
-    val root = Paths.get(table)
-    if (!Files.exists(root)) Seq.empty
-    else {
-      val stream = Files.list(root)
-      try {
-        val out = Seq.newBuilder[String]
-        stream.forEach { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("gen-") && Files.isDirectory(p)) out += n
-        }
-        out.result().sorted
-      } finally stream.close()
-    }
-  }
+  /** The generation DIRECTORIES of `table` — never the
+    * `gen-NNNNNNNN.claim` files beside them. */
+  private def listGenerations(table: String): Seq[String] =
+    listDir(table)(_.startsWith("gen-"))
+      .filter(g => Files.isDirectory(Paths.get(table, g)))
 
   private def nextGenNumber(table: String): Long = {
     val fromDirs = listGenerations(table)
@@ -572,7 +521,7 @@ object Warehouse {
     // claimed-but-unwritten slots count too: a crashed claimant's number
     // is never reused (its claim file stays until vacuum), so no later
     // writer can stage into a dir another process might still be writing
-    val fromClaims = listRoot(table)(_.endsWith(ClaimSuffix))
+    val fromClaims = listDir(table)(_.endsWith(ClaimSuffix))
       .map(_.stripPrefix("gen-").stripSuffix(ClaimSuffix).toLong)
     ((fromDirs ++ fromManifest ++ fromClaims) :+ 0L).max + 1
   }
@@ -625,17 +574,7 @@ object Warehouse {
 
   private def listDeleteFiles(table: String, gen: String): Seq[String] = {
     val dir = Paths.get(table, gen, DeletesName)
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val stream = Files.list(dir)
-      try {
-        val out = Seq.newBuilder[String]
-        stream.forEach { p =>
-          if (p.getFileName.toString.startsWith("d-")) out += p.toString
-        }
-        out.result().sorted
-      } finally stream.close()
-    }
+    listDir(dir.toString)(_.startsWith("d-")).map(n => dir.resolve(n).toString)
   }
 
   /** The union of a generation's tombstoned keys (one column, named as
@@ -792,19 +731,10 @@ object Warehouse {
     * underscore/dot-prefixed entries (`_deletes`, `_SUCCESS`, hidden files)
     * are metadata, never data.
     */
-  private def generationDataFiles(table: String, gen: String): Seq[String] = {
-    val dir = Paths.get(table, gen)
-    val stream = Files.list(dir)
-    try {
-      val out = Seq.newBuilder[String]
-      stream.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-          out += s"$gen/$n"
-      }
-      out.result().sorted
-    } finally stream.close()
-  }
+  private def generationDataFiles(table: String, gen: String): Seq[String] =
+    listDir(s"$table/$gen")(n =>
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
+      .map(n => s"$gen/$n")
 
   /** EXECUTE a [[compactionPlan]] over the live generation of a
     * versioned table — the OPTIMIZE run itself, not just the job list.

@@ -225,37 +225,36 @@ class DedupSpec extends SparkSpec {
     assert(out == Set(1L, 3L))
   }
 
-  test("minhashNearDups: the array fast path and the capped postings path " +
-      "produce identical pairs and jaccards on testdata") {
-    // Two implementations of one contract: maxShingleDf = MaxValue takes
-    // the per-doc-array pipeline (projection signatures, array_intersect
-    // confirm); any finite cap takes the exploded-postings pipeline. A cap
-    // above every real df must not change the output — this cross-gates
-    // the array path against the postings path the oracle was built on.
+  test("minhashNearDups and fuzzyDecontaminate report exactly the pairs " +
+      "and jaccards of the exact n-gram join on testdata") {
+    // LSH only prunes candidates; the array_intersect confirm decides. At
+    // 16 bands x 4 rows a true pair at jaccard 0.8 escapes every band with
+    // p ~ 2e-4, so on sf0.001 both banded operators must equal the exact
+    // ngramJaccardPairs definition the q21/q69 oracles replay.
     val docs = graft.GraftSession.table(spark, "/root/testdata/sf0.001", "documents")
-    def pairs(cap: Int) = Dedup.minhashNearDups(docs, "doc_id", "text",
-        3, 64, 16, 0.8, maxShingleDf = cap)
-      .collect()
-      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) ->
-        r.getAs[Double]("jaccard")).toMap
-    val arrayPath = pairs(Int.MaxValue)
+    // sorted rows, not a map: a pair reported twice must fail too
+    def pairRows(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      df.collect().map(r => (r.getAs[Long](a), r.getAs[Long](b),
+        r.getAs[Double]("jaccard"))).toSeq.sortBy(p => (p._1, p._2))
+    val exact = pairRows(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8),
+      "id_a", "id_b")
     graft.CacheScope.releaseAll()
-    val postingsPath = pairs(Int.MaxValue - 1) // finite → postings machinery
+    val banded = pairRows(Dedup.minhashNearDups(docs, "doc_id", "text",
+      3, 64, 16, 0.8), "id_a", "id_b")
     graft.CacheScope.releaseAll()
-    assert(arrayPath.nonEmpty)
-    assert(arrayPath == postingsPath)
-    // same dual-path contract for the cross-corpus decontamination form
-    def cross(cap: Int) = Dedup.fuzzyDecontaminate(
+    assert(exact.nonEmpty)
+    assert(banded == exact)
+    // cross-corpus form, split as q69 splits: every exact pair with one
+    // side in each half, oriented (corpus, bench)
+    val isBench = (id: Long) => id % 5 == 0
+    val exactCross = exact.collect { case (a, b, j) if isBench(a) != isBench(b) =>
+      if (isBench(b)) (a, b, j) else (b, a, j) }.sortBy(p => (p._1, p._2))
+    val cross = pairRows(Dedup.fuzzyDecontaminate(
         docs.filter(col("doc_id") % 5 =!= 0), docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", 3, 64, 16, 0.8, maxShingleDf = cap)
-      .collect()
-      .map(r => (r.getAs[Long]("corpus_id"), r.getAs[Long]("bench_id")) ->
-        r.getAs[Double]("jaccard")).toMap
-    val crossArray = cross(Int.MaxValue)
+        "doc_id", "text", 3, 64, 16, 0.8), "corpus_id", "bench_id")
     graft.CacheScope.releaseAll()
-    val crossPostings = cross(Int.MaxValue - 1)
-    graft.CacheScope.releaseAll()
-    assert(crossArray == crossPostings)
+    assert(exactCross.nonEmpty)
+    assert(cross == exactCross)
   }
 
   test("lshIndexProbe: probing a new batch against the stored index " +

@@ -32,8 +32,8 @@ class WarehouseSpec extends SparkSpec {
     val filesBefore = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(filesBefore >= 8)
-    val n = Warehouse.compact(spark, dir, targetFiles = 2)
-    assert(n == 40)
+    // compaction is a publish of the current snapshot in fewer partitions
+    Warehouse.publish(spark, spark.read.parquet(dir).repartition(2), dir)
     val filesAfter = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(filesAfter <= 2)
@@ -65,13 +65,13 @@ class WarehouseSpec extends SparkSpec {
       "resolve a complete generation, crashed publishes are invisible") {
     import spark.implicits._
     val table = tempDir("graft-wh-versioned") + "/t"
-    val g1 = Warehouse.publishVersioned(spark, (1 to 10).toDF("id"), table)
+    val g1 = Warehouse.publishVersioned((1 to 10).toDF("id"), table)
     assert(g1 == "gen-00000001")
     assert(Warehouse.readVersioned(spark, table).count() == 10)
     // a reader that resolved gen-1 keeps a consistent snapshot across the
     // next publish (no rename ever touches gen-1)
     val pinned = spark.read.parquet(s"$table/$g1")
-    val g2 = Warehouse.publishVersioned(spark, (1 to 25).toDF("id"), table)
+    val g2 = Warehouse.publishVersioned((1 to 25).toDF("id"), table)
     assert(Warehouse.readVersioned(spark, table).count() == 25)
     assert(pinned.count() == 10)
     // crash BEFORE the manifest flip = an orphan generation dir; readers
@@ -79,7 +79,7 @@ class WarehouseSpec extends SparkSpec {
     (1 to 3).toDF("id").write.parquet(s"$table/gen-00000003")
     assert(Warehouse.liveGeneration(table).contains(g2))
     assert(Warehouse.readVersioned(spark, table).count() == 25)
-    val g4 = Warehouse.publishVersioned(spark, (1 to 40).toDF("id"), table)
+    val g4 = Warehouse.publishVersioned((1 to 40).toDF("id"), table)
     assert(g4 == "gen-00000004")
     assert(Warehouse.readVersioned(spark, table).count() == 40)
     // vacuum keeps the live gen + 1 of COMMITTED history (gen-2) — the
@@ -108,10 +108,10 @@ class WarehouseSpec extends SparkSpec {
   test("schema evolution across generations + time travel reads") {
     import spark.implicits._
     val table = tempDir("graft-wh-evolve") + "/t"
-    val g1 = Warehouse.publishVersioned(spark,
+    val g1 = Warehouse.publishVersioned(
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), table)
     // atomic schema change: next generation adds a column
-    val g2 = Warehouse.publishVersioned(spark,
+    val g2 = Warehouse.publishVersioned(
       Seq((1L, "a", 0.5), (2L, "b", 0.7)).toDF("id", "v", "score"), table)
     assert(Warehouse.readVersioned(spark, table).columns.toSeq ==
       Seq("id", "v", "score"))
@@ -179,7 +179,7 @@ class WarehouseSpec extends SparkSpec {
       "re-delete is idempotent, appends union, compact purges physically") {
     import spark.implicits._
     val table = tempDir("graft-wh-dv") + "/t"
-    val gen1 = Warehouse.publishVersioned(spark,
+    val gen1 = Warehouse.publishVersioned(
       (1L to 10L).map(i => (i, s"row$i")).toDF("id", "v"), table)
     // soft delete two keys
     assert(Warehouse.deleteWhere(spark, table, "id", col("id") <= 2L) == 2L)
@@ -271,7 +271,7 @@ class WarehouseSpec extends SparkSpec {
       "materialize, history serves the pre-compaction generation") {
     import spark.implicits._
     val table = tempDir("graft-wh-optimize") + "/t"
-    val g1 = Warehouse.publishVersioned(spark,
+    val g1 = Warehouse.publishVersioned(
       (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
         .repartition(16), table)
     Warehouse.deleteWhere(spark, table, "id", col("id") % 10 === 0)
@@ -345,7 +345,7 @@ class WarehouseSpec extends SparkSpec {
       "(r10 verdict #6)") {
     import spark.implicits._
     val table = tempDir("graft-wh-cas") + "/t"
-    val g1 = Warehouse.publishVersioned(spark, (1 to 10).toDF("id"), table)
+    val g1 = Warehouse.publishVersioned((1 to 10).toDF("id"), table)
     // the race window, deterministically: two writers computed the same
     // next number; the first claim wins, the second throws retryable
     Warehouse.claimSlot(table, "gen-00000002")
@@ -361,7 +361,7 @@ class WarehouseSpec extends SparkSpec {
     // its retry re-reads the table state, claims PAST the burned slot
     // (a stalled writer may still be staging gen-2 — its number is never
     // reused), and publishes normally
-    val g3 = Warehouse.publishVersioned(spark, (1 to 5).toDF("id"), table)
+    val g3 = Warehouse.publishVersioned((1 to 5).toDF("id"), table)
     assert(g3 == "gen-00000003")
     assert(Warehouse.readVersioned(spark, table).count() == 5)
   }
@@ -371,7 +371,7 @@ class WarehouseSpec extends SparkSpec {
       "rows and every committed generation is intact") {
     import spark.implicits._
     val table = tempDir("graft-wh-race") + "/t"
-    Warehouse.publishVersioned(spark, (1 to 3).toDF("id"), table)
+    Warehouse.publishVersioned((1 to 3).toDF("id"), table)
     val dsA = (1 to 100).toDF("id")
     val dsB = (201 to 400).toDF("id")
     val barrier = new java.util.concurrent.CyclicBarrier(2)
@@ -379,7 +379,7 @@ class WarehouseSpec extends SparkSpec {
     def writer(name: String, df: org.apache.spark.sql.DataFrame) =
       new Thread(() => {
         barrier.await()
-        try { results.put(name, Warehouse.publishVersioned(spark, df, table)) }
+        try { results.put(name, Warehouse.publishVersioned(df, table)) }
         catch {
           case _: Warehouse.ConcurrentPublishException =>
             results.put(name, "retryable")
@@ -409,10 +409,10 @@ class WarehouseSpec extends SparkSpec {
     }
     // a loser that retries succeeds cleanly on a fresh slot
     if (ra == "retryable") {
-      Warehouse.publishVersioned(spark, dsA, table)
+      Warehouse.publishVersioned(dsA, table)
       assert(Warehouse.readVersioned(spark, table).count() == 100)
     } else if (rb == "retryable") {
-      Warehouse.publishVersioned(spark, dsB, table)
+      Warehouse.publishVersioned(dsB, table)
       assert(Warehouse.readVersioned(spark, table).count() == 200)
     }
   }
@@ -421,11 +421,11 @@ class WarehouseSpec extends SparkSpec {
       "claimed slot cannot flip the table backward") {
     import spark.implicits._
     val table = tempDir("graft-wh-mono") + "/t"
-    Warehouse.publishVersioned(spark, (1 to 3).toDF("id"), table)
+    Warehouse.publishVersioned((1 to 3).toDF("id"), table)
     // writer X claims gen-2 but stalls (claim only — simulate by hand)
     Files.createFile(java.nio.file.Paths.get(table, "gen-00000002.claim"))
     // writer Y claims gen-3 and completes first
-    val g3 = Warehouse.publishVersioned(spark, (1 to 30).toDF("id"), table)
+    val g3 = Warehouse.publishVersioned((1 to 30).toDF("id"), table)
     assert(g3 == "gen-00000003")
     // X wakes up and completes its stale slot: stage data + commit marker
     // + numbered live marker, exactly what commitAndFlip would do
@@ -450,7 +450,7 @@ class WarehouseSpec extends SparkSpec {
       yield (d * 100 + h, f"2024-03-0$d $h%02d:30:00")
     val df = rows.toDF("id", "s")
       .select(col("id"), col("s").cast("timestamp_ntz").as("ts"))
-    val g1 = Warehouse.publishHiddenPartitioned(spark, df, table,
+    val g1 = Warehouse.publishHiddenPartitioned(df, table,
       Warehouse.TimeTransform("ts", "day"))
     assert(Warehouse.hiddenTransformOf(table, g1).map(_.spec)
       .contains("day(ts)"))
@@ -478,9 +478,9 @@ class WarehouseSpec extends SparkSpec {
       yield (d * 100 + h, f"2024-03-0$d $h%02d:15:00")
     val df = rows.toDF("id", "s")
       .select(col("id"), col("s").cast("timestamp_ntz").as("ts"))
-    val g1 = Warehouse.publishHiddenPartitioned(spark, df, table,
+    val g1 = Warehouse.publishHiddenPartitioned(df, table,
       Warehouse.TimeTransform("ts", "day"))
-    val g2 = Warehouse.publishHiddenPartitioned(spark, df, table,
+    val g2 = Warehouse.publishHiddenPartitioned(df, table,
       Warehouse.TimeTransform("ts", "hour"))
     assert(Warehouse.liveGeneration(table).contains(g2))
     assert(Warehouse.hiddenTransformOf(table, g2).map(_.spec)
